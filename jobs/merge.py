@@ -34,7 +34,10 @@ def main() -> None:
     ap.add_argument("--existing-osm-pbf", default=None,
                     help="read existing-OSM state from .osm.pbf files (compact binary format)")
     ap.add_argument("--format", default="parquet",
-                    help="input table format: parquet (default) or iceberg (needs runtime jars; paths are then catalog identifiers)")
+                    help="input table format: parquet (default) or iceberg "
+                         "(a table directory path is read by the built-in "
+                         "pure-Python reader, no jars; a catalog identifier "
+                         "such as cat.db.pages needs the Iceberg runtime jars)")
     ap.add_argument("--out", required=True)
     ap.add_argument("--master", default=None)
     ap.add_argument("--level", type=int, default=None)

@@ -12,7 +12,7 @@ Bit-identical to cells.py (asserted in tests/test_cells_sql.py).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from mergeaddressesandbuildings_spark import config
 
@@ -128,6 +128,17 @@ def bbox_cover_cells_expr(min_lat: Column, min_lon: Column,
             )
         ).cast("array<long>")
     )
+
+
+def explode_bbox_cover(df: DataFrame, level: int) -> DataFrame:
+    """One row per level-``level`` bbox-cover cell of each row of ``df``
+    (bbox in ``min_lat``/``min_lon``/``max_lat``/``max_lon``), keyed by a
+    new ``cell`` column — the cover side of a partition-based spatial
+    merge join (the J1/J2 pair-join and J3 building dedupe)."""
+    return df.withColumn("cell", F.explode(bbox_cover_cells_expr(
+        F.col("min_lat"), F.col("min_lon"), F.col("max_lat"), F.col("max_lon"),
+        level,
+    )))
 
 
 def neighbors_expr(cell: Column, level: int = config.CELL_LEVEL) -> Column:

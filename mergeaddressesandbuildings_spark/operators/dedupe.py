@@ -2,7 +2,7 @@
 (SURVEY.md §2.3 J3, J4).
 
 - J3 (buildings): a new footprint overlapping an existing way is
-  dropped. Cell-cover equi-join (cogroup) + bbox prefilter + exact
+  dropped. Cell-cover equi-join + bbox prefilter + exact
   ring-overlap kernel → left_anti on the hit list.
 - J4 (addresses): a new address with the same normalized
   (street, housenumber) within ε meters of an existing address node is
@@ -107,33 +107,14 @@ def dedupe_buildings(new_buildings: DataFrame, existing_ways: DataFrame,
     A coarse cogroup variant (whole level-12 cells into one kernel call)
     was 10× slower on urban data: one ~10 km cell holds the entire
     corpus slice, serializing the work into a handful of groups."""
-    def cover(df: DataFrame, prefix: str = "") -> DataFrame:
-        p = (lambda c: f"{prefix}{c}") if prefix else (lambda c: c)
-        return df.withColumn(
-            "cell",
-            F.explode(
-                cells_sql.bbox_cover_cells_expr(
-                    F.col(p("min_lat")), F.col(p("min_lon")),
-                    F.col(p("max_lat")), F.col(p("max_lon")), join_level,
-                )
-            ),
-        )
-
-    n_exp = cover(new_buildings.select(
-        "building_id", "ring_lats", "ring_lons", "hole_lats", "hole_lons",
-        "min_lat", "min_lon", "max_lat", "max_lon",
-    ))
-    e_exp = cover(existing_ways.select(
-        F.col("building_id").alias("e_id"),
-        F.col("ring_lats").alias("e_ring_lats"),
-        F.col("ring_lons").alias("e_ring_lons"),
-        F.col("hole_lats").alias("e_hole_lats"),
-        F.col("hole_lons").alias("e_hole_lons"),
-        F.col("min_lat").alias("e_min_lat"),
-        F.col("min_lon").alias("e_min_lon"),
-        F.col("max_lat").alias("e_max_lat"),
-        F.col("max_lon").alias("e_max_lon"),
-    ), prefix="e_")
+    cols = ["ring_lats", "ring_lons", "hole_lats", "hole_lons",
+            "min_lat", "min_lon", "max_lat", "max_lon"]
+    n_exp = cells_sql.explode_bbox_cover(
+        new_buildings.select("building_id", *cols), join_level)
+    e_exp = cells_sql.explode_bbox_cover(
+        existing_ways.select("building_id", *cols), join_level,
+    ).select("cell", F.col("building_id").alias("e_id"),
+             *[F.col(c).alias(f"e_{c}") for c in cols])
 
     cand = (
         n_exp.join(e_exp, "cell")

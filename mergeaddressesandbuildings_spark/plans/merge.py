@@ -7,7 +7,7 @@
                                                           ▼
                       buildings universe = survivors ∪ existing ways
                                                           │
-        J1 PIP cogroup-on-cell ──► winners ──┐            │
+        J1 PIP fine-cell join ───► winners ──┐            │
         J2 kNN on the unmatched remainder ───┤◄───────────┘
                                              ▼
               decisions (A1/J5) ──► assignments + output sets
@@ -73,7 +73,6 @@ def run_merge(
     level: int = config.CELL_LEVEL,
     budget: int = config.TILE_MAX_ELEMS,
     knn_cutoff_m: float = config.KNN_CUTOFF_M,
-    salt_threshold: int = config.SALT_THRESHOLD,
     broadcast_max: int = config.BROADCAST_BUILDINGS_MAX,
     county_ring: tuple | None = None,
     barrier_dir: str | None = "auto",
@@ -155,8 +154,7 @@ def run_merge(
             ).toPandas()
         )
 
-    pip = sj.pip_candidates(addresses, buildings, broadcast_index=broadcast_idx,
-                            salt_threshold=salt_threshold)
+    pip = sj.pip_candidates(addresses, buildings, broadcast_index=broadcast_idx)
     # winners feed three consumers (unmatched anti-join, decisions,
     # output sets) — persist AND materialize eagerly: a lazily-persisted
     # frame referenced from several branches of one downstream job gets
@@ -168,8 +166,7 @@ def run_merge(
 
     unmatched = addresses.join(pip_winners.select("addr_id"), "addr_id", "left_anti")
     knn = sj.knn_candidates(unmatched, buildings, cutoff_m=knn_cutoff_m,
-                            level=level, broadcast_index=broadcast_idx,
-                            salt_threshold=salt_threshold)
+                            broadcast_index=broadcast_idx)
     knn_winners = sj.pick_knn_winner(knn).persist(StorageLevel.MEMORY_AND_DISK)
     knn_winners.count()
 

@@ -83,10 +83,11 @@ def test_holed_assignments_match_oracle_pairjoin(spark, rows, golden):
     assert got == want
 
 
-def test_holed_strategy_equivalence(spark, rows, golden):
-    """All three join strategies (incl. the cogroup path, which ships
-    holes PACKED through Arrow — geom.flatten_polys_packed) agree with
-    the oracle on the holed fixture."""
+def test_holed_strategy_equivalence(spark, rows):
+    """Broadcast index and pair-join pick identical PIP winners and
+    identical kNN winners (kNN over ALL addresses, so courtyard points
+    inside a hole exercise hole-aware distance on both paths) on the
+    holed fixture."""
     from mergeaddressesandbuildings_spark.operators import (
         extract, spatial_join as sj,
     )
@@ -96,6 +97,12 @@ def test_holed_strategy_equivalence(spark, rows, golden):
     addresses, new_b = extract.split_records(records)
     _, ex_ways = extract.existing_to_tables(existing)
     buildings = new_b.unionByName(ex_ways)
+    bidx = sj.build_broadcast_index(
+        buildings.select(
+            "building_id", "ring_lats", "ring_lons", "hole_lats", "hole_lons",
+            "min_lat", "min_lon", "max_lat", "max_lon", "area_m2",
+        ).toPandas()
+    )
 
     def fp(df):
         import pyspark.sql.functions as F
@@ -103,16 +110,14 @@ def test_holed_strategy_equivalence(spark, rows, golden):
                    F.count("*").alias("n")).collect()[0]
         return r["f"], r["n"]
 
-    cg = fp(sj.pick_pip_winner(
-        sj.pip_candidates(addresses, buildings, strategy="cogroup")))
-    pj = fp(sj.pick_pip_winner(
-        sj.pip_candidates(addresses, buildings, strategy="pairjoin")))
-    assert cg == pj and cg[1] > 0
-    cgk = fp(sj.pick_knn_winner(
-        sj.knn_candidates(addresses, buildings, strategy="cogroup")))
-    pjk = fp(sj.pick_knn_winner(
-        sj.knn_candidates(addresses, buildings, strategy="pairjoin")))
-    assert cgk == pjk and cgk[1] > 0
+    bc = fp(sj.pick_pip_winner(
+        sj.pip_candidates(addresses, buildings, broadcast_index=bidx)))
+    pj = fp(sj.pick_pip_winner(sj.pip_candidates(addresses, buildings)))
+    assert bc == pj and bc[1] > 0
+    bck = fp(sj.pick_knn_winner(
+        sj.knn_candidates(addresses, buildings, broadcast_index=bidx)))
+    pjk = fp(sj.pick_knn_winner(sj.knn_candidates(addresses, buildings)))
+    assert bck == pjk and bck[1] > 0
     records.unpersist()
 
 

@@ -5,6 +5,7 @@ sets, same tile membership — while recomputing only the affected-cell
 closure (asserted: the sub-run touches a strict subset of addresses).
 """
 
+import json
 import os
 
 import pandas as pd
@@ -165,6 +166,14 @@ def test_second_delta_stays_exact(spark, state, tmp_path):
         tdir = os.path.join(chain_dir, tbl)
         if snap.current_snapshot_id(tdir) is not None:
             assert snap.relocate(tdir, state_dir, chain_dir) > 0
+    # state written by older builds carries a since-removed
+    # "salt_threshold" meta key; apply_delta must ignore it
+    meta_path = inc._meta_path(chain_dir)
+    with open(meta_path) as f:
+        meta = json.load(f)
+    meta["salt_threshold"] = 20000
+    with open(meta_path, "w") as f:
+        json.dump(meta, f)
 
     add2 = pg.gen_pages_pdf(range(N_PAGES + 50, N_PAGES + 60))
     add2["deleted"] = False

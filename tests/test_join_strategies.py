@@ -1,9 +1,8 @@
 """Strategy equivalence for the J1/J2 spatial join (SURVEY.md §2.3):
-broadcast (numpy fine-cell index in a Spark broadcast), pair-join
-(fine-cell equi-join + per-pair Arrow refine, the default shuffle
-path), and cogroup (salted applyInPandas groups) must produce
-identical winner sets — the physical strategy is a pure performance
-choice, never a semantics choice."""
+broadcast (numpy fine-cell index in a Spark broadcast) and pair-join
+(fine-cell equi-join + per-pair Arrow refine, the shuffle path) must
+produce identical winner sets — the physical strategy is a pure
+performance choice, never a semantics choice."""
 
 from __future__ import annotations
 
@@ -42,11 +41,8 @@ def test_pip_strategy_equivalence(spark, corpus):
     )
     bc = _fp(sj.pick_pip_winner(
         sj.pip_candidates(addresses, buildings, broadcast_index=bidx)))
-    pj = _fp(sj.pick_pip_winner(
-        sj.pip_candidates(addresses, buildings, strategy="pairjoin")))
-    cg = _fp(sj.pick_pip_winner(
-        sj.pip_candidates(addresses, buildings, strategy="cogroup")))
-    assert bc == pj == cg
+    pj = _fp(sj.pick_pip_winner(sj.pip_candidates(addresses, buildings)))
+    assert bc == pj
     assert bc[1] > 0
 
 
@@ -58,7 +54,7 @@ def test_knn_topk_matches_bruteforce(spark, corpus):
     from mergeaddressesandbuildings_spark.functions import geom
 
     addresses, buildings = corpus
-    cands = sj.knn_candidates(addresses, buildings, strategy="pairjoin")
+    cands = sj.knn_candidates(addresses, buildings)
     got = {}
     for r in sj.pick_knn_topk(cands, k=3).collect():
         got.setdefault(r["addr_id"], []).append(
@@ -100,11 +96,8 @@ def test_knn_strategy_equivalence(spark, corpus):
     )
     bc = _fp(sj.pick_knn_winner(
         sj.knn_candidates(addresses, buildings, broadcast_index=bidx)))
-    pj = _fp(sj.pick_knn_winner(
-        sj.knn_candidates(addresses, buildings, strategy="pairjoin")))
-    cg = _fp(sj.pick_knn_winner(
-        sj.knn_candidates(addresses, buildings, strategy="cogroup")))
-    assert bc == pj == cg
+    pj = _fp(sj.pick_knn_winner(sj.knn_candidates(addresses, buildings)))
+    assert bc == pj
     assert bc[1] > 0
 
 
