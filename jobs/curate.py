@@ -18,9 +18,10 @@ Chain (every stage an operator this repo already oracle-checks):
     → optional Hamilton token-budget apportionment across languages
       (sampling.apportion_budget, --budget 0 = keep all)
     → shard assignment (webpipe.shard_assign)
-    → snapshot commit (sources/snapshots.py) — each run appends ONE
-      snapshot, so successive crawl increments are time-travelable
-      and consumable exactly-once via read_changes.
+    → Iceberg commit (sources/iceberg.py) — the first run creates the
+      table, each later run appends ONE snapshot, so successive crawl
+      increments are time-travelable and consumable exactly-once via
+      read_changes.
 
 Prints one JSON line {wall_s, pages_in, after_url_dedup, after_quality,
 after_content_dedup, rows_out, snapshot_id, fingerprint, master};
@@ -46,7 +47,7 @@ def main() -> None:
     ap.add_argument("--pages-path", default=None,
                     help="read a pages parquet table instead of generating")
     ap.add_argument("--out", required=True,
-                    help="snapshot table directory (sources/snapshots.py)")
+                    help="Iceberg table directory (sources/iceberg.py)")
     ap.add_argument("--master", default=None)
     ap.add_argument("--lang", default=None,
                     help="keep only this lang value (default: keep all)")
@@ -70,8 +71,8 @@ def main() -> None:
         sampling, textstats, webpipe,
     )
     from mergeaddressesandbuildings_spark.session import get_spark
+    from mergeaddressesandbuildings_spark.sources import iceberg as ice
     from mergeaddressesandbuildings_spark.sources import pages as pg
-    from mergeaddressesandbuildings_spark.sources import snapshots
 
     spark = get_spark(master=args.master, app_name="curate-job")
     spark.sparkContext.setLogLevel("ERROR")
@@ -129,7 +130,7 @@ def main() -> None:
             strat=F.col("lang"), key=F.col("doc_id"),
         ).drop("quota", "sort_hash", "cum_before")
 
-    # 6) shard + 7) snapshot commit
+    # 6) shard + 7) table commit
     out = webpipe.shard_assign(uniq, F.col("doc_id"), args.n_shards)
     quality_cols = (["keep", "reasons"]
                     if args.quality == "annotate" else [])
@@ -139,7 +140,12 @@ def main() -> None:
         "coalesce(bit_xor(xxhash64(url, text)), 0L)").alias("fp"),
         F.count("*").alias("n"))
     fp_row = fp_df.collect()[0]
-    manifest = snapshots.write_snapshot(out, args.out, mode="append")
+    commit = (ice.append_iceberg
+              if os.path.isdir(os.path.join(args.out, "metadata"))
+              else ice.write_iceberg)
+    sid = commit(out, args.out)
+    meta = ice.load_metadata(args.out)
+    live, _ = ice.plan_scan(meta, ice.select_snapshot(meta))
 
     print(json.dumps({
         "job": "curate",
@@ -148,8 +154,8 @@ def main() -> None:
         "after_quality": after_quality,
         "after_content_dedup": after_dedup,
         "rows_out": int(fp_row["n"]),
-        "snapshot_id": manifest["snapshot_id"],
-        "snapshot_rows_total": manifest["n_rows"],
+        "snapshot_id": sid,
+        "snapshot_rows_total": sum(t.record_count for t in live),
         "fingerprint": int(fp_row["fp"]),
         "wall_s": round(time.monotonic() - t0, 2),
         "pages_per_sec": round(pages_in / (time.monotonic() - t0), 1),

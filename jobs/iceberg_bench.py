@@ -84,7 +84,7 @@ def main() -> None:
     phases["pos_delete_commit"] = round(time.monotonic() - t, 2)
 
     t = time.monotonic()
-    I.add_equality_deletes(
+    I.splice(
         spark, tdir,
         spark.createDataFrame([("src3",)], ["source"]), ["source"])
     phases["eq_delete_commit"] = round(time.monotonic() - t, 2)

@@ -130,6 +130,7 @@ def main() -> None:
     from mergeaddressesandbuildings_spark.plans import incremental as inc
     from mergeaddressesandbuildings_spark.session import get_spark
     from mergeaddressesandbuildings_spark.sources import catalog
+    from mergeaddressesandbuildings_spark.sources import iceberg as ice
     from mergeaddressesandbuildings_spark.sources import pages as pg
 
     spark = get_spark(master=args.master, app_name=f"incr-{args.cmd}")
@@ -148,11 +149,11 @@ def main() -> None:
             pages = pg.pages_df(spark, args.pages_count)
             existing = (None if args.no_existing
                         else pg.existing_osm_df(spark, args.pages_count))
-        m = inc.full_build(spark, pages, existing, args.state,
-                           level=args.level or config.CELL_LEVEL)
-        out.update({"n_records": m["records"]["n_rows"],
-                    "n_addresses": m["addresses"]["n_rows"],
-                    "n_buildings": m["buildings"]["n_rows"]})
+        inc.full_build(spark, pages, existing, args.state,
+                       level=args.level or config.CELL_LEVEL)
+        out.update({f"n_{tbl}": ice.read_iceberg(
+            spark, os.path.join(args.state, tbl)).count()
+            for tbl in ("records", "addresses", "buildings")})
 
     elif args.cmd == "delta":
         if args.delta_path:
@@ -173,31 +174,24 @@ def main() -> None:
             out["rep_walls_s"] = walls
 
     elif args.cmd == "maintain":
-        # long-run state health: every delta commit leaves rewrite
-        # files behind and pins replaced files via old manifests —
-        # compaction packs the small files, expiry reclaims the disk
-        from mergeaddressesandbuildings_spark.sources import snapshots
-
+        # long-run state health: every delta commit adds an equality
+        # delete that each read applies, and pins superseded files via
+        # old snapshots — compaction materializes the deletes, expiry
+        # reclaims the disk. Never run this on a copied state tree: the
+        # copy's metadata names the original's files, so expiry would
+        # delete them.
         per_table = {}
         for tbl in inc._TABLES:
             tdir = os.path.join(args.state, tbl)
-            if snapshots.current_snapshot_id(tdir) is None:
-                continue
-            cm = snapshots.compact_files(spark, tdir)
-            em = snapshots.expire_snapshots(tdir, keep_last=1)
-            # post-maintenance layout health: live file count and
-            # bytes are the early-warning signal for layout rot
-            # (encoding bloat / parallelism collapse — see
-            # BENCH/BASELINE.md round-3 part 6)
-            live = cm.get("files", [])
+            sid = ice.compact_table(spark, tdir)
+            em = ice.expire_snapshots(tdir, keep_last=1)
+            meta = ice.load_metadata(tdir)
+            live, _ = ice.plan_scan(meta, ice.select_snapshot(meta))
             per_table[tbl] = {
-                "compacted_files": cm.get("n_compacted_files", 0),
-                "expired_snapshots": len(
-                    em.get("expired_snapshot_ids", [])),
-                "deleted_files": em.get("n_deleted_files", 0),
+                "snapshot_id": sid,
+                **em,
                 "live_files": len(live),
-                "live_bytes": sum(os.path.getsize(f) for f in live),
-                "cluster_by": cm.get("cluster_by"),
+                "live_bytes": sum(os.path.getsize(f.path) for f in live),
             }
         out["tables"] = per_table
 

@@ -6,8 +6,8 @@ checkpoints" — this is the re-RUN side of resumability).
 At 10^12 pages a crawl increment touches a vanishing fraction of
 urls; re-running the full pipeline to absorb it wastes O(corpus)
 extraction + spatial-join work. This plan keeps the expensive stages'
-results in snapshot-versioned tables (sources/snapshots.py) keyed so
-a url-level change set can be SPLICED in:
+results in Iceberg tables (sources/iceberg.py) keyed so a url-level
+change set can be SPLICED in:
 
     state tables (all under one state dir)
       records      extract_records output, keyed by url   [O(pages)]
@@ -16,8 +16,8 @@ a url-level change set can be SPLICED in:
                    keyed by url ('osm://existing' rows
                    are the static OSM state)              [O(elems)]
       pip_winners  §8.4(1) winners + the address CELL,
-                   keyed and range-clustered by cell      [O(elems)]
-      knn_winners  §8.4(2) winners, same layout           [O(elems)]
+                   keyed by cell                          [O(elems)]
+      knn_winners  §8.4(2) winners, same key              [O(elems)]
       ex_nodes     existing OSM address nodes (static)
       meta.json    the merge parameters the state was built with
                    (level, cutoff, …) — an increment MUST reuse them
@@ -39,10 +39,10 @@ so the spatial join re-runs ONLY over (addresses in ring1) ×
 CELL: every winner that can change sits in a ring1 cell (sub
 addresses by construction; removed urls' addresses because their
 cells are in base ⊆ ring1), so "delete ring1 cells, insert the
-sub-run's winners" is exact — and since the winner tables are
-range-clustered by cell, the copy-on-write rewrite touches only the
-ring-intersecting files, not the table (an addr_id key would
-hash-scatter a spatially-local purge across EVERY file). Decisions
+sub-run's winners" is exact. Every splice is merge-on-read
+(`iceberg.splice`: an equality delete on the keys plus the inserts,
+one snapshot): it rewrites no data file, so its cost is O(delta)
+whatever the table's layout. Decisions
 CANNOT be spliced — §8.4's per-building vote
 (conflict/keep-node/merged) aggregates over ALL addresses assigned to
 a building, so one spliced winner can flip the decision of an
@@ -84,7 +84,7 @@ from mergeaddressesandbuildings_spark.operators import (
     spatial_join as sj,
     tiling,
 )
-from mergeaddressesandbuildings_spark.sources import snapshots as snap
+from mergeaddressesandbuildings_spark.sources import iceberg as ice
 
 _TABLES = ("records", "addresses", "buildings",
            "pip_winners", "knn_winners", "ex_nodes")
@@ -196,7 +196,8 @@ def full_build(spark: SparkSession, pages: DataFrame,
                knn_cutoff_m: float = config.KNN_CUTOFF_M,
                broadcast_max: int = config.BROADCAST_BUILDINGS_MAX) -> dict:
     """Run the full pipeline once and persist the incremental state
-    tables. Returns {table: manifest} plus the run parameters."""
+    tables as new Iceberg tables under ``state_dir``. Returns
+    {table: snapshot id} plus the run parameters."""
     os.makedirs(state_dir, exist_ok=True)
 
     # extraction is CPU-bound per row; fan a compact input out to the
@@ -205,17 +206,9 @@ def full_build(spark: SparkSession, pages: DataFrame,
     if pages.rdd.getNumPartitions() < par:
         pages = pages.repartition(par * 2)
 
-    # state tables are written CLUSTERED BY their splice key: a changed
-    # key then hits O(1) data files, so replace_keys' copy-on-write
-    # rewrites a bounded file set instead of the whole table (the same
-    # reason Iceberg tables bucket by merge key)
-    nfiles = par * 2
-
-    records = extract.extract_records(pages, level=level) \
-        .repartition(nfiles, "url")
-    m_rec = snap.write_snapshot(records, _t(state_dir, "records"),
-                                mode="overwrite", cluster_by=["url"])
-    records = snap.read_snapshot(spark, _t(state_dir, "records"))
+    records = extract.extract_records(pages, level=level)
+    s_rec = ice.write_iceberg(records, _t(state_dir, "records"))
+    records = ice.read_iceberg(spark, _t(state_dir, "records"))
 
     addresses, new_buildings = extract.split_records(records)
     if existing_osm is not None:
@@ -229,39 +222,25 @@ def full_build(spark: SparkSession, pages: DataFrame,
             [], "addr_id long, lat double, lon double, "
                 "housenumber string, street string")
         buildings = new_buildings
-    snap.write_snapshot(ex_nodes, _t(state_dir, "ex_nodes"),
-                        mode="overwrite")
+    ice.write_iceberg(ex_nodes, _t(state_dir, "ex_nodes"))
 
-    m_addr = snap.write_snapshot(addresses.repartition(nfiles, "url"),
-                                 _t(state_dir, "addresses"),
-                                 mode="overwrite", cluster_by=["url"])
-    m_bld = snap.write_snapshot(buildings.repartition(nfiles, "url"),
-                                _t(state_dir, "buildings"),
-                                mode="overwrite", cluster_by=["url"])
-    addresses = snap.read_snapshot(spark, _t(state_dir, "addresses"))
-    buildings = snap.read_snapshot(spark, _t(state_dir, "buildings"))
+    s_addr = ice.write_iceberg(addresses, _t(state_dir, "addresses"))
+    s_bld = ice.write_iceberg(buildings, _t(state_dir, "buildings"))
+    addresses = ice.read_iceberg(spark, _t(state_dir, "addresses"))
+    buildings = ice.read_iceberg(spark, _t(state_dir, "buildings"))
 
     pip_w, knn_w = _winners(spark, addresses, buildings,
                             knn_cutoff_m, broadcast_max)
-    # RANGE-cluster the winner tables by cell: an increment's purge
-    # set is a set of spatially-local cells, so range clustering keeps
-    # the copy-on-write rewrite to the ring-intersecting files
-    m_pip = snap.write_snapshot(
-        pip_w.repartitionByRange(nfiles, "cell"),
-        _t(state_dir, "pip_winners"), mode="overwrite",
-        cluster_by=["cell"], cluster_kind="range")
-    m_knn = snap.write_snapshot(
-        knn_w.repartitionByRange(nfiles, "cell"),
-        _t(state_dir, "knn_winners"), mode="overwrite",
-        cluster_by=["cell"], cluster_kind="range")
+    s_pip = ice.write_iceberg(pip_w, _t(state_dir, "pip_winners"))
+    s_knn = ice.write_iceberg(knn_w, _t(state_dir, "knn_winners"))
     pip_w.unpersist()
 
     meta = {"level": level, "knn_cutoff_m": knn_cutoff_m,
             "broadcast_max": broadcast_max}
     with open(_meta_path(state_dir), "w") as f:
         json.dump(meta, f)
-    return {"records": m_rec, "addresses": m_addr, "buildings": m_bld,
-            "pip_winners": m_pip, "knn_winners": m_knn, **meta}
+    return {"records": s_rec, "addresses": s_addr, "buildings": s_bld,
+            "pip_winners": s_pip, "knn_winners": s_knn, **meta}
 
 
 def apply_delta(spark: SparkSession, page_changes: DataFrame,
@@ -309,8 +288,7 @@ def apply_delta(spark: SparkSession, page_changes: DataFrame,
     n_new_records = new_records.count()
     _lap("extract_delta")
 
-    records_tbl = _t(state_dir, "records")
-    old_changed = (snap.read_snapshot(spark, records_tbl)
+    old_changed = (ice.read_iceberg(spark, _t(state_dir, "records"))
                    .join(changed_urls, "url", "left_semi")
                    .persist())
     n_old_records = old_changed.count()
@@ -323,36 +301,28 @@ def apply_delta(spark: SparkSession, page_changes: DataFrame,
     ring1, ring2 = _closure_rings(base)
     _lap("closure_rings")
 
-    # splice the element tables by url (replace_keys: delete-then-
-    # insert). The three tables are independent — their commits run
-    # concurrently (Spark schedules the jobs side by side; the
-    # snapshot layer is single-writer PER TABLE, which threads here
-    # respect). NOTE: ex_ways must come from the PRE-splice buildings
-    # snapshot, so resolve the frozen file list before launching.
+    # splice the element tables by url (delete-then-insert; every
+    # insert row's url IS a changed url, since the inserts derive from
+    # the upsert half of the change set). The three tables are
+    # independent — their commits run concurrently (Spark schedules
+    # the jobs side by side; a table commit is single-writer PER
+    # TABLE, which threads here respect). NOTE: ex_ways must come from
+    # the PRE-splice buildings snapshot, so plan it before launching.
     addr_delta, bld_delta = extract.split_records(new_records)
-    ex_nodes = snap.read_snapshot(spark, _t(state_dir, "ex_nodes"))
-    ex_ways = (snap.read_snapshot(spark, _t(state_dir, "buildings"))
+    ex_nodes = ice.read_iceberg(spark, _t(state_dir, "ex_nodes"))
+    ex_ways = (ice.read_iceberg(spark, _t(state_dir, "buildings"))
                .filter(F.col("existing")))
     addr_delta = dedupe.dedupe_addresses(addr_delta, ex_nodes)
     bld_delta = dedupe.dedupe_buildings(bld_delta, ex_ways)
     from concurrent.futures import ThreadPoolExecutor
 
-    # inserts_covered: every insert row's url IS a changed url by
-    # construction (the inserts derive from the upsert half of the
-    # change set)
     with ThreadPoolExecutor(max_workers=3) as pool:
         futs = [
-            pool.submit(snap.replace_keys, spark, records_tbl, ["url"],
-                        changed_urls, new_records,
-                        inserts_covered=True),
-            pool.submit(snap.replace_keys, spark,
-                        _t(state_dir, "addresses"), ["url"],
-                        changed_urls, addr_delta,
-                        inserts_covered=True),
-            pool.submit(snap.replace_keys, spark,
-                        _t(state_dir, "buildings"), ["url"],
-                        changed_urls, bld_delta,
-                        inserts_covered=True),
+            pool.submit(ice.splice, spark, _t(state_dir, tbl),
+                        changed_urls, ["url"], inserts)
+            for tbl, inserts in (("records", new_records),
+                                 ("addresses", addr_delta),
+                                 ("buildings", bld_delta))
         ]
         for f in futs:
             f.result()
@@ -360,12 +330,12 @@ def apply_delta(spark: SparkSession, page_changes: DataFrame,
     new_records.unpersist()
 
     # recompute winners on the closure slice only
-    addresses = snap.read_snapshot(spark, _t(state_dir, "addresses"))
-    buildings = snap.read_snapshot(spark, _t(state_dir, "buildings"))
+    addresses = ice.read_iceberg(spark, _t(state_dir, "addresses"))
+    buildings = ice.read_iceberg(spark, _t(state_dir, "buildings"))
     n_addr_total = addresses.count()
 
     # widen the slices to the session's parallelism BEFORE caching:
-    # the semi-join inherits the snapshot scan's partitioning (ring1
+    # the semi-join inherits the table scan's partitioning (ring1
     # broadcasts), i.e. the table's FILE count — after maintenance
     # that can be far below the core count, and every map stage of the
     # winner recompute (cover explode before the pair-join shuffle)
@@ -392,22 +362,18 @@ def apply_delta(spark: SparkSession, page_changes: DataFrame,
                             meta["knn_cutoff_m"], meta["broadcast_max"])
 
     # splice winners BY CELL (module docstring): every winner that can
-    # change sits in a ring1 cell, so the purge key set is ring1
-    # itself — a few hundred rows — and the cell-range-clustered
-    # tables rewrite only their ring-intersecting files
+    # change sits in a ring1 cell, and every sub-run winner's cell is
+    # in ring1 (sub addresses are the ring1 semi-join), so the delete
+    # key set is ring1 itself — a few hundred rows
     knn_w = knn_w.persist()
     knn_w.count()  # materialize before the concurrent splices race it
     _lap("winners")
-    # inserts_covered: every sub-run winner's cell ∈ ring1 (sub
-    # addresses are the ring1 semi-join by construction)
     with ThreadPoolExecutor(max_workers=2) as pool:
         futs = [
-            pool.submit(snap.replace_keys, spark,
-                        _t(state_dir, "pip_winners"), ["cell"],
-                        ring1, pip_w, inserts_covered=True),
-            pool.submit(snap.replace_keys, spark,
-                        _t(state_dir, "knn_winners"), ["cell"],
-                        ring1, knn_w, inserts_covered=True),
+            pool.submit(ice.splice, spark, _t(state_dir, tbl),
+                        ring1, ["cell"], inserts)
+            for tbl, inserts in (("pip_winners", pip_w),
+                                 ("knn_winners", knn_w))
         ]
         for f in futs:
             f.result()
@@ -441,13 +407,13 @@ def current_outputs(spark: SparkSession, state_dir: str,
     fingerprint-bearing flat output."""
     with open(_meta_path(state_dir)) as f:
         meta = json.load(f)
-    addresses = snap.read_snapshot(spark, _t(state_dir, "addresses"))
-    buildings = snap.read_snapshot(spark, _t(state_dir, "buildings"))
+    addresses = ice.read_iceberg(spark, _t(state_dir, "addresses"))
+    buildings = ice.read_iceberg(spark, _t(state_dir, "buildings"))
     # the stored winners carry their splice key (cell) — drop it
     # before assign, whose address join brings its own cell column
-    pip_w = snap.read_snapshot(spark, _t(state_dir, "pip_winners")) \
+    pip_w = ice.read_iceberg(spark, _t(state_dir, "pip_winners")) \
         .drop("cell")
-    knn_w = snap.read_snapshot(spark, _t(state_dir, "knn_winners")) \
+    knn_w = ice.read_iceberg(spark, _t(state_dir, "knn_winners")) \
         .drop("cell")
 
     assignments = dec.assign(addresses, pip_w, knn_w, buildings)

@@ -75,13 +75,11 @@ def run_merge(
     knn_cutoff_m: float = config.KNN_CUTOFF_M,
     broadcast_max: int = config.BROADCAST_BUILDINGS_MAX,
     county_ring: tuple | None = None,
-    barrier_dir: str | None = "auto",
+    barrier_dir: str = "auto",
 ) -> MergeResult:
     """See module docstring. ``barrier_dir``: scratch directory for
     lineage barriers (parquet write + re-read of the small intermediate
-    tables); ``"auto"`` creates a temp dir, ``None`` disables barriers
-    (pure-lazy mode — correct but slow, the persisted frames keep full
-    lineage and every downstream action pays plan re-analysis)."""
+    tables); ``"auto"`` creates a temp dir."""
     # parquet splitting is SIZE-based; page html is small but extraction
     # is CPU-heavy per row, so a compact fixture scan yields far fewer
     # partitions than cores and the Arrow kernels run almost serial.
@@ -129,17 +127,13 @@ def run_merge(
     else:
         buildings = new_buildings
 
-    if barrier_dir is not None:
-        # lineage barrier #1: addresses/buildings feed four downstream
-        # consumers each (PIP, kNN, decisions, tiling) — cap the plan
-        # they all inherit. This is also the cache-consistency barrier
-        # (parquet is immutable, so the parallel stage submission race
-        # that lazily-persisted frames suffer cannot occur).
-        addresses = _lineage_barrier(spark, addresses, f"{barrier_dir}/addresses")
-        buildings = _lineage_barrier(spark, buildings, f"{barrier_dir}/buildings")
-    else:
-        addresses = addresses.persist(StorageLevel.MEMORY_AND_DISK)
-        buildings = buildings.persist(StorageLevel.MEMORY_AND_DISK)
+    # lineage barrier #1: addresses/buildings feed four downstream
+    # consumers each (PIP, kNN, decisions, tiling) — cap the plan they
+    # all inherit. This is also the cache-consistency barrier (parquet
+    # is immutable, so the parallel stage submission race that
+    # lazily-persisted frames suffer cannot occur).
+    addresses = _lineage_barrier(spark, addresses, f"{barrier_dir}/addresses")
+    buildings = _lineage_barrier(spark, buildings, f"{barrier_dir}/buildings")
 
     # J6 broadcast decision: small building side → ship as closure, no
     # shuffle at all. (On a cluster this is the per-region fast path.)
@@ -171,14 +165,10 @@ def run_merge(
     knn_winners.count()
 
     assignments = dec.assign(addresses, pip_winners, knn_winners, buildings)
-    if barrier_dir is not None:
-        # lineage barrier #2: assignments fan into output sets, tiling,
-        # and the caller's writes.
-        assignments = _lineage_barrier(
-            spark, assignments, f"{barrier_dir}/assignments")
-    else:
-        assignments = assignments.persist(StorageLevel.MEMORY_AND_DISK)
-        assignments.count()  # see pip_winners note: materialize before fan-out
+    # lineage barrier #2: assignments fan into output sets, tiling, and
+    # the caller's writes.
+    assignments = _lineage_barrier(
+        spark, assignments, f"{barrier_dir}/assignments")
     sets = dec.output_sets(assignments, buildings)
 
     points = tiling.tile_points(assignments, buildings)

@@ -3339,25 +3339,26 @@ def order_price_bands(spark, sf_dir):
     """,
 )
 def snapshot_time_travel(spark, sf_dir):
-    """Snapshot-table time travel (sources/snapshots.py): commit the
-    even documents as snapshot 1, the odd ones as snapshot 2, then
-    read the table AS OF snapshot 1 — the oracle is the even half,
-    so a hash match proves the manifest chain isolates snapshots
-    (the s2 data files exist on disk but must stay invisible).
-    Iceberg-spec shape: immutable data files + per-snapshot manifest
-    + atomically swapped current pointer; readers plan over the
-    frozen file list, never a directory listing."""
+    """Changes-read between two snapshots (sources/iceberg.py
+    read_changes): commit the odd documents as snapshot 1, append the
+    even ones as snapshot 2 and the odd ones again (re-keyed +1e7) as
+    snapshot 3, then read the rows added in (1, 2]. The oracle is the
+    even half, so a hash match proves both ends of the range: the
+    snapshot-1 files are excluded although still live, and the
+    snapshot-3 files exist on disk but stay invisible. Planning reads
+    only the manifest chain, never a directory listing."""
     import tempfile
 
-    from mergeaddressesandbuildings_spark.sources import snapshots as S
+    from mergeaddressesandbuildings_spark.sources import iceberg as I
 
-    docs = _t(spark, sf_dir, "documents").select(
-        F.col("doc_id").cast("long").alias("doc_id"), "source",
-        F.col("n_chars").cast("long").alias("n_chars"))
+    docs = _ice_docs(spark, sf_dir)
+    odd = F.col("doc_id") % 2 != 0
     tdir = tempfile.mkdtemp(prefix="snap_tbl_")
-    S.write_snapshot(docs.filter(F.col("doc_id") % 2 == 0), tdir)
-    S.write_snapshot(docs.filter(F.col("doc_id") % 2 != 0), tdir)
-    return S.read_snapshot(spark, tdir, snapshot_id=1)
+    sid1 = I.write_iceberg(docs.filter(odd), tdir)
+    sid2 = I.append_iceberg(docs.filter(~odd), tdir)
+    I.append_iceberg(docs.filter(odd).withColumn(
+        "doc_id", F.col("doc_id") + 10_000_000), tdir)
+    return I.read_changes(spark, tdir, sid1, sid2)
 
 
 @register(
@@ -3379,39 +3380,34 @@ def snapshot_time_travel(spark, sf_dir):
     """,
 )
 def snapshot_merge_upsert(spark, sf_dir):
-    """Iceberg-style MERGE INTO with file-level copy-on-write
-    (sources/snapshots.py merge_upsert): commit the corpus as two
-    appends (several data-file groups), then apply one change set —
+    """MERGE INTO as one keyed splice (sources/iceberg.py splice):
+    commit the corpus as two appends, then apply one change set —
     updates (doc_id%10==0: n_chars+1000), deletes (%10==1), inserts
-    (%10==2 re-keyed +1e6) — and read the resulting snapshot. The
-    oracle recomputes the merged state relationally, so a hash match
-    proves matched-replace + delete + insert semantics end-to-end
-    through the manifest layer. Only data files CONTAINING a matched
-    key are rewritten; untouched files ride into the new manifest by
-    reference (asserted file-for-file in tests/test_snapshots.py)."""
+    (%10==2 re-keyed +1e6) — as an equality delete on every changed
+    key plus the non-deleted change rows, one snapshot at one sequence
+    number, and read the result. The oracle recomputes the merged
+    state relationally, so a hash match proves matched-replace +
+    delete + insert semantics end-to-end through merge-on-read: no
+    data file is rewritten, the delete applies only to the prior
+    appends."""
     import tempfile
 
-    from mergeaddressesandbuildings_spark.sources import snapshots as S
+    from mergeaddressesandbuildings_spark.sources import iceberg as I
 
-    docs = _t(spark, sf_dir, "documents").select(
-        F.col("doc_id").cast("long").alias("doc_id"), "source",
-        F.col("n_chars").cast("long").alias("n_chars"))
+    docs = _ice_docs(spark, sf_dir)
     tdir = tempfile.mkdtemp(prefix="snap_mrg_")
-    S.write_snapshot(docs.filter(F.col("doc_id") % 4 < 2), tdir)
-    S.write_snapshot(docs.filter(F.col("doc_id") % 4 >= 2), tdir)
+    I.write_iceberg(docs.filter(F.col("doc_id") % 4 < 2), tdir)
+    I.append_iceberg(docs.filter(F.col("doc_id") % 4 >= 2), tdir)
     m = F.col("doc_id") % 10
     changes = (
         docs.filter(m == 0)
         .withColumn("n_chars", F.col("n_chars") + 1000)
-        .withColumn("is_del", F.lit(False))
-        .unionByName(docs.filter(m == 1)
-                     .withColumn("is_del", F.lit(True)))
         .unionByName(docs.filter(m == 2)
-                     .withColumn("doc_id", F.col("doc_id") + 1000000)
-                     .withColumn("is_del", F.lit(False)))
+                     .withColumn("doc_id", F.col("doc_id") + 1000000))
     )
-    S.merge_upsert(changes, tdir, ["doc_id"], delete_col="is_del")
-    return S.read_snapshot(spark, tdir)
+    I.splice(spark, tdir, changes.unionByName(docs.filter(m == 1)),
+             ["doc_id"], inserts=changes)
+    return I.read_iceberg(spark, tdir)
 
 
 def _ice_docs(spark, sf_dir):
@@ -3484,7 +3480,7 @@ def iceberg_mor_deletes(spark, sf_dir):
     I.write_iceberg(docs.filter(F.col("doc_id") % 2 == 0), tdir)
     I.append_iceberg(docs.filter(F.col("doc_id") % 2 != 0), tdir)
     I.delete_where(spark, tdir, "doc_id % 3 = 0")
-    I.add_equality_deletes(
+    I.splice(
         spark, tdir, spark.createDataFrame([("src7",)], ["source"]),
         ["source"])
     late = (docs.filter(F.col("doc_id") % 3 == 0)
@@ -3601,7 +3597,7 @@ def iceberg_compaction_gc(spark, sf_dir):
     tdir = tempfile.mkdtemp(prefix="ice_gc_")
     I.write_iceberg(docs, tdir, partition_by=["source"])
     I.delete_where(spark, tdir, "doc_id % 4 = 0")
-    I.add_equality_deletes(
+    I.splice(
         spark, tdir, spark.createDataFrame([("src5",)], ["source"]),
         ["source"])
     I.compact_table(spark, tdir)

@@ -1,16 +1,16 @@
 """Pure-Python Apache Iceberg v2 table format layer (no runtime jars).
 
 BASELINE.json's north_rule and input_hint put the production corpus in
-an *Iceberg table* of Common-Crawl-style pages. This sandbox has no
+an *Iceberg table* of Common-Crawl-style pages. The deployment has no
 `iceberg-spark-runtime` jars, no pyiceberg and no Avro library
-(SURVEY.md §9), so until round 5 the repo only *abstracted* the format
-(`sources/catalog.py`) and reimplemented its manifest/stats-pruning/
-optimistic-commit ideas in a parquet-native sibling
-(`sources/snapshots.py`). This module closes the remaining gap at the
-FORMAT level: it reads and writes real Iceberg v2 table metadata —
-`vN.metadata.json`, Avro manifest lists, Avro manifests, positional and
-equality delete files — using `sources/avroio.py` (spec-faithful pure
-Python) and plans scans from that metadata alone.
+(SURVEY.md §9), so this module implements the format itself: it reads
+and writes real Iceberg v2 table metadata — `vN.metadata.json`, Avro
+manifest lists, Avro manifests, positional and equality delete files —
+using `sources/avroio.py` (spec-faithful pure Python) and plans scans
+from that metadata alone. It is the engine's only table layer: the
+incremental merge state (`plans/incremental.py`), the curated corpus
+(`jobs/curate.py`) and the registry's table queries all commit here,
+and `read_changes` gives append-only ranges exactly-once.
 
 Everything follows the PUBLIC Iceberg Table Spec
 (https://iceberg.apache.org/spec/) — field ids, inheritance and delete
@@ -60,7 +60,6 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
 from . import avroio
-from .snapshots import _footer_rows, _footer_stats
 
 POS_DELETE_FIELD_PATH = 2147483546  # spec: reserved field id for file_path
 POS_DELETE_FIELD_POS = 2147483545   # spec: reserved field id for pos
@@ -324,12 +323,16 @@ def _meta_dir(table_dir: str) -> str:
 
 
 def _read_version_hint(table_dir: str) -> int:
+    """The live metadata version: the larger of the version hint and
+    the highest vN.metadata.json present. A commit publishes vN before
+    it rewrites the hint, so a crash between the two leaves the hint
+    one behind — trusting it alone would make every later commit
+    retry the taken vN and fail with CommitConflict forever."""
     hint = os.path.join(_meta_dir(table_dir), "version-hint.text")
+    best = 0
     if os.path.exists(hint):
         with open(hint) as fh:
-            return int(fh.read().strip())
-    # spec fallback: highest vN.metadata.json present
-    best = 0
+            best = int(fh.read().strip())
     if os.path.isdir(_meta_dir(table_dir)):
         for name in os.listdir(_meta_dir(table_dir)):
             if name.endswith(".metadata.json") and name.startswith("v"):
@@ -881,6 +884,41 @@ def read_iceberg(spark: SparkSession, table_dir: str,
     return out.select(*cols).to(schema)
 
 
+def read_changes(spark: SparkSession, table_dir: str, from_id: int,
+                 to_id: int) -> DataFrame:
+    """Rows ADDED in snapshots (from_id, to_id] — exactly-once
+    incremental consumption over an append-only range; ``from_id`` is
+    ``to_id`` or one of its ancestors. Raises if any snapshot in the
+    range is not an `append` (its delta is not expressible as added
+    rows). The spec gives every data file the sequence number of the
+    snapshot that added it and an append removes nothing, so the
+    range's added files are exactly ``to_id``'s live data files with
+    a sequence number above ``from_id``'s — planned from metadata and
+    read through the same field-id projection as `read_iceberg`."""
+    meta = load_metadata(table_dir)
+    to_snap = select_snapshot(meta, to_id)
+    from_seq = select_snapshot(meta, from_id)["sequence-number"]
+    snap = to_snap
+    while snap["snapshot-id"] != from_id:
+        op = snap["summary"]["operation"]
+        if op != "append":
+            raise IcebergError(
+                f"snapshot {snap['snapshot-id']} is {op!r}: changes-read "
+                "is only defined over append-only ranges")
+        if "parent-snapshot-id" not in snap:
+            raise IcebergError(
+                f"snapshot {from_id} is not an ancestor of {to_id}")
+        snap = select_snapshot(meta, snap["parent-snapshot-id"])
+    read_sch = _current_schema(meta)
+    schema = spark_schema(meta, read_sch)
+    data, _ = plan_scan(meta, to_snap, read_schema=read_sch)
+    added = [t for t in data if t.seq > from_seq]
+    if not added:
+        return spark.createDataFrame([], schema)
+    return _project_tasks(spark, meta, read_sch, added,
+                          need_seq=False).to(schema)
+
+
 def _by_seq(tasks: list[DeleteTask]) -> dict[int, list[DeleteTask]]:
     out: dict[int, list[DeleteTask]] = {}
     for t in tasks:
@@ -988,6 +1026,64 @@ def _hive_partition(path: str, root: str,
     return vals
 
 
+_STAT_STR_CAP = 64  # string bounds truncated Iceberg-style
+
+
+def _footer_rows(path: str) -> int:
+    import pyarrow.parquet as pq
+
+    return pq.ParquetFile(path).metadata.num_rows
+
+
+def _trunc_lower(v, cap: int = _STAT_STR_CAP):
+    """Lower bound, possibly truncated: a prefix of the true min is
+    still <= every value in the file."""
+    return v[:cap] if isinstance(v, str) and len(v) > cap else v
+
+
+def _trunc_upper(v, cap: int = _STAT_STR_CAP):
+    """Upper bound, possibly truncated: ``prefix + U+10FFFF`` is >=
+    every string sharing that prefix (Iceberg's truncated upper
+    bound)."""
+    if isinstance(v, str) and len(v) > cap:
+        return v[:cap] + chr(0x10FFFF)
+    return v
+
+
+def _footer_stats(path: str) -> dict:
+    """Per-column [min, max] from the parquet footer (driver-side
+    metadata read, no Spark job — where Iceberg manifests get their
+    column bounds). Only JSON-stable primitive types (int/float/str/
+    bool) and only top-level columns; a column missing stats in ANY
+    row group records no bounds (pruning then treats the file as an
+    always-candidate — conservative)."""
+    import pyarrow.parquet as pq
+
+    md = pq.ParquetFile(path).metadata
+    bounds: dict[str, list] = {}
+    dropped: set[str] = set()
+    for rg in range(md.num_row_groups):
+        g = md.row_group(rg)
+        for ci in range(g.num_columns):
+            col = g.column(ci)
+            name = col.path_in_schema
+            if "." in name or name in dropped:
+                continue  # nested leaf — not a top-level column
+            st = col.statistics
+            if (st is None or not st.has_min_max
+                    or not isinstance(st.min, (int, float, str, bool))):
+                dropped.add(name)
+                bounds.pop(name, None)
+                continue
+            mn, mx = _trunc_lower(st.min), _trunc_upper(st.max)
+            if name in bounds:
+                b = bounds[name]
+                b[0], b[1] = min(b[0], mn), max(b[1], mx)
+            else:
+                bounds[name] = [mn, mx]
+    return bounds
+
+
 def _data_file_entry(path: str, partition: dict, schema: dict,
                      content: int = 0,
                      equality_ids: list[int] | None = None) -> dict:
@@ -1023,7 +1119,8 @@ def _write_manifest(table_dir: str, sid: int, seq: int,
                     schema: dict, tag: str) -> dict:
     schema_avro = _manifest_schema(partition_fields)
     os.makedirs(_meta_dir(table_dir), exist_ok=True)
-    path = os.path.join(_meta_dir(table_dir), f"m-{sid}-{tag}.avro")
+    path = os.path.join(_meta_dir(table_dir),
+                        f"m-{sid}-{tag}-{_attempt_id()}.avro")
     for e in entries:  # delete files carry an all-null partition struct
         for p in partition_fields:
             e["partition"].setdefault(p["name"], None)
@@ -1084,8 +1181,7 @@ def _commit_snapshot(table_dir: str, manifest_entries: list[dict],
         sid, seq, snaps, slog, parent_id = 1, 1, [], [], None
         base_v = 0
 
-    mlist = os.path.join(
-        md, f"snap-{sid}-1-{_table_uuid(table_dir)[:8]}.avro")
+    mlist = os.path.join(md, f"snap-{sid}-1-{_attempt_id()}.avro")
     avroio.write_container(mlist, _manifest_list_schema(),
                            manifest_entries)
     now_ms = int(time.time() * 1000)
@@ -1169,10 +1265,18 @@ def _partition_fields(schema: dict, partition_by: list[str]) -> list:
     return out
 
 
+def _table_partition_fields(meta: dict, schema: dict) -> list:
+    """The table's default partition spec as ``_partition_fields``."""
+    spec = _spec_by_id(meta, meta["default-spec-id"])
+    by_id = _field_by_id(schema)
+    return _partition_fields(
+        schema, [by_id[f["source-id"]]["name"] for f in spec["fields"]])
+
+
 def write_iceberg(df: DataFrame, table_dir: str,
                   partition_by: list[str] | None = None) -> int:
-    """Create an Iceberg v2 table from ``df`` (overwrites any existing
-    table dir state by starting at v1). Returns the snapshot id."""
+    """Create an Iceberg v2 table from ``df``; a directory that already
+    holds one is refused. Returns the snapshot id."""
     if os.path.exists(os.path.join(_meta_dir(table_dir),
                                    "version-hint.text")):
         raise IcebergError(
@@ -1184,45 +1288,56 @@ def write_iceberg(df: DataFrame, table_dir: str,
 def append_iceberg(df: DataFrame, table_dir: str) -> int:
     """Append a snapshot to an existing table (schema must match by
     name; partitioning is the table's)."""
-    meta = load_metadata(table_dir)
-    spec = _spec_by_id(meta, meta["default-spec-id"])
-    by_id = _field_by_id(_current_schema(meta))
-    partition_by = [by_id[f["source-id"]]["name"]
-                    for f in spec["fields"]]
-    return _append(df, table_dir, partition_by=partition_by or None,
-                   parent=meta)
+    return _append(df, table_dir, partition_by=None,
+                   parent=load_metadata(table_dir))
 
 
 def _append(df: DataFrame, table_dir: str,
             partition_by: list[str] | None, parent: dict | None) -> int:
     if parent is None:
         schema = _ice_schema_json(df)
+        pfields = _partition_fields(schema, partition_by or [])
     else:
         schema = _current_schema(parent)
-        df = df.select(*[
-            F.col(f["name"]).cast(_ice_type_to_spark(f["type"]))
-            .alias(f["name"]) for f in schema["fields"]])
-    pfields = _partition_fields(schema, partition_by or [])
+        pfields = _table_partition_fields(parent, schema)
+        df = _to_schema(df, schema)
     sid_next = max((s["snapshot-id"]
                     for s in (parent or {}).get("snapshots", [])),
                    default=0) + 1
     seq_next = (parent or {}).get("last-sequence-number", 0) + 1
-    data_root = os.path.join(table_dir, "data",
-                         f"snap-{sid_next}-{_attempt_id()}")
-    w = df.write.mode("errorifexists")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(data_root)
-    part_types = {p["name"]: p["ice_type"] for p in pfields}
-    entries = []
-    for path in _list_parquet(data_root):
-        part = _hive_partition(path, data_root, part_types)
-        entries.append(_data_file_entry(path, part, schema))
-    manifest = _write_manifest(table_dir, sid_next, seq_next, entries,
-                               pfields, schema, "data")
+    manifest = _write_data(df, table_dir, sid_next, seq_next, pfields,
+                           schema, "data")
     manifests = _existing_manifests(parent) if parent else []
     return _commit_snapshot(table_dir, manifests + [manifest],
                             "append", parent, schema, pfields)
+
+
+def _to_schema(df: DataFrame, schema: dict) -> DataFrame:
+    """``df``'s columns matched to the table schema by name and cast
+    to its types."""
+    return df.select(*[
+        F.col(f["name"]).cast(_ice_type_to_spark(f["type"]))
+        .alias(f["name"]) for f in schema["fields"]])
+
+
+def _write_data(df: DataFrame, table_dir: str, sid: int, seq: int,
+                pfields: list[dict], schema: dict, tag: str) -> dict:
+    """Write ``df`` (identity-partitioned by ``pfields``) under an
+    attempt-unique data root and return the manifest-list entry of one
+    manifest naming its files."""
+    data_root = os.path.join(table_dir, "data",
+                             f"{tag}-{sid}-{_attempt_id()}")
+    w = df.write.mode("errorifexists")
+    if pfields:
+        w = w.partitionBy(*[p["name"] for p in pfields])
+    w.parquet(data_root)
+    part_types = {p["name"]: p["ice_type"] for p in pfields}
+    entries = [
+        _data_file_entry(p, _hive_partition(p, data_root, part_types),
+                         schema)
+        for p in _list_parquet(data_root)]
+    return _write_manifest(table_dir, sid, seq, entries, pfields,
+                           schema, tag)
 
 
 # promotions the spec allows for primitives (we support the two that
@@ -1348,51 +1463,13 @@ def delete_where(spark: SparkSession, table_dir: str,
      .coalesce(1)
      .write.mode("errorifexists").parquet(dels_root))
     schema = _current_schema(meta)
-    spec = _spec_by_id(meta, meta["default-spec-id"])
-    by_id = _field_by_id(schema)
-    pfields = _partition_fields(
-        schema, [by_id[f["source-id"]]["name"] for f in spec["fields"]])
+    pfields = _table_partition_fields(meta, schema)
     seq_next = meta["last-sequence-number"] + 1
     sid_next = max(s["snapshot-id"] for s in meta["snapshots"]) + 1
     entries = [_data_file_entry(p, {}, schema, content=1)
                for p in _list_parquet(dels_root)]
     manifest = _write_manifest(table_dir, sid_next, seq_next, entries,
                                pfields, schema, "posdel")
-    return _commit_snapshot(table_dir,
-                            _existing_manifests(meta) + [manifest],
-                            "delete", meta, schema, pfields)
-
-
-def add_equality_deletes(spark: SparkSession, table_dir: str,
-                         values: DataFrame,
-                         eq_cols: list[str]) -> int:
-    """Commit EQUALITY deletes: any existing row (data_seq < delete
-    seq, per spec) whose ``eq_cols`` null-safely equal a row of
-    ``values`` is deleted. Rows appended AFTER this snapshot are NOT
-    affected — the sequence-number rule the tests pin."""
-    meta = load_metadata(table_dir)
-    schema = _current_schema(meta)
-    by_name = _field_by_name(schema)
-    for c in eq_cols:
-        if c not in by_name:
-            raise IcebergError(f"equality column {c!r} not in schema")
-    sid_next = max((s["snapshot-id"] for s in meta["snapshots"]),
-                   default=0) + 1
-    seq_next = meta["last-sequence-number"] + 1
-    dels_root = os.path.join(table_dir, "data",
-                         f"eqdel-{sid_next}-{_attempt_id()}")
-    (values.select(*eq_cols).distinct().coalesce(1)
-     .write.mode("errorifexists").parquet(dels_root))
-    spec = _spec_by_id(meta, meta["default-spec-id"])
-    by_id = _field_by_id(schema)
-    pfields = _partition_fields(
-        schema, [by_id[f["source-id"]]["name"] for f in spec["fields"]])
-    eq_ids = [by_name[c]["id"] for c in eq_cols]
-    entries = [_data_file_entry(p, {}, schema, content=2,
-                                equality_ids=eq_ids)
-               for p in _list_parquet(dels_root)]
-    manifest = _write_manifest(table_dir, sid_next, seq_next, entries,
-                               pfields, schema, "eqdel")
     return _commit_snapshot(table_dir,
                             _existing_manifests(meta) + [manifest],
                             "delete", meta, schema, pfields)
@@ -1496,27 +1573,11 @@ def compact_table(spark: SparkSession, table_dir: str) -> int:
     if snap is None:
         raise IcebergError("cannot compact an empty table")
     schema = _current_schema(meta)
-    spec = _spec_by_id(meta, meta["default-spec-id"])
-    by_id = _field_by_id(schema)
-    partition_by = [by_id[f["source-id"]]["name"]
-                    for f in spec["fields"]]
-    pfields = _partition_fields(schema, partition_by)
-    df = read_iceberg(spark, table_dir)
+    pfields = _table_partition_fields(meta, schema)
     sid_next = max(s["snapshot-id"] for s in meta["snapshots"]) + 1
-    seq_next = meta["last-sequence-number"] + 1
-    data_root = os.path.join(table_dir, "data",
-                         f"snap-{sid_next}-{_attempt_id()}")
-    w = df.write.mode("errorifexists")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(data_root)
-    part_types = {p["name"]: p["ice_type"] for p in pfields}
-    entries = []
-    for path in _list_parquet(data_root):
-        part = _hive_partition(path, data_root, part_types)
-        entries.append(_data_file_entry(path, part, schema))
-    manifest = _write_manifest(table_dir, sid_next, seq_next, entries,
-                               pfields, schema, "compact")
+    manifest = _write_data(read_iceberg(spark, table_dir), table_dir,
+                           sid_next, meta["last-sequence-number"] + 1,
+                           pfields, schema, "compact")
     return _commit_snapshot(table_dir, [manifest], "replace", meta,
                             schema, pfields)
 
@@ -1564,7 +1625,9 @@ def _write_metadata_version(table_dir: str, meta: dict,
     ``expected_from + 1`` (the version the writer's state was loaded
     from), so a writer racing on the same parent — or on a STALE one —
     gets a loud CommitConflict (spec: atomic swap of the metadata
-    pointer), never a lost update."""
+    pointer), never a lost update. The version is written in full to a
+    temp name first and then linked into place (``os.link`` creates or
+    fails atomically), so no reader or racer can see a partial vN."""
     if expected_from is None:
         expected_from = meta.get("_loaded-version",
                                  _read_version_hint(table_dir))
@@ -1573,15 +1636,20 @@ def _write_metadata_version(table_dir: str, meta: dict,
     v = expected_from + 1
     md = _meta_dir(table_dir)
     path = os.path.join(md, f"v{v}.metadata.json")
+    tmp = os.path.join(md, f".v{v}-{_attempt_id()}.tmp")
+    with open(tmp, "w") as fh:
+        json.dump(meta, fh, indent=1)
     try:
-        with open(path, "x") as fh:
-            json.dump(meta, fh, indent=1)
+        os.link(tmp, path)
     except FileExistsError:
         raise IcebergError(
             f"CommitConflict: v{v} was committed concurrently — "
             "reload table metadata and retry") from None
-    with open(os.path.join(md, "version-hint.text"), "w") as fh:
+    finally:
+        os.remove(tmp)
+    with open(tmp, "w") as fh:
         fh.write(str(v))
+    os.replace(tmp, os.path.join(md, "version-hint.text"))
 
 
 def expire_snapshots(table_dir: str, keep_last: int | None = None,
@@ -1703,65 +1771,55 @@ def remove_orphan_files(table_dir: str,
     return {"deleted_files": deleted}
 
 
-def merge_upsert(spark: SparkSession, table_dir: str,
-                 updates: DataFrame, keys: list[str]) -> int:
-    """Row-level MERGE (upsert) as ONE atomic snapshot: an equality
-    delete on ``keys`` for the incoming rows plus the appended rows,
-    committed together (operation `overwrite`). Existing rows whose
-    keys match an update are superseded; unmatched incoming rows are
-    inserts. Both manifests share the new sequence number, so per the
-    spec's `data_seq < delete_seq` rule the delete erases only PRIOR
-    file generations — the rows appended by this same commit survive.
-    Merge-on-read: no existing data file is rewritten; a later
-    compact_table materializes. This is the rolling-crawl upsert shape
-    (latest capture of each url wins) at 100 TB: commit cost is
-    O(delta), never O(table)."""
+def splice(spark: SparkSession, table_dir: str, keys: DataFrame,
+           key_cols: list[str], inserts: DataFrame | None = None) -> int:
+    """Keyed delete-then-insert as ONE atomic snapshot: an equality
+    delete on the distinct ``key_cols`` of ``keys`` plus the appended
+    ``inserts``, both at the new sequence number. Per the spec's
+    `data_seq < delete_seq` rule the delete erases every PRIOR row of
+    a matched key — however many rows the key had — while the rows
+    this commit appends survive it. So:
+
+    - an upsert (latest capture of each url wins) passes the updates
+      as both ``keys`` and ``inserts``;
+    - a many-rows-per-key replace (a url's extracted records, a cell's
+      winners) passes the changed keys and all their new rows — a key
+      with no insert rows drops to zero;
+    - ``inserts=None`` commits the delete alone (operation `delete`).
+
+    Every insert's key must be in ``keys``: an insert whose key is not
+    lands beside that key's old rows. Merge-on-read: no data file is
+    rewritten, so commit cost is O(delta), never O(table); a later
+    compact_table materializes the deletes."""
     meta = load_metadata(table_dir)
     schema = _current_schema(meta)
     by_name = _field_by_name(schema)
-    for k in keys:
+    for k in key_cols:
         if k not in by_name:
-            raise IcebergError(f"merge key {k!r} not in schema")
-    spec = _spec_by_id(meta, meta["default-spec-id"])
-    by_id = _field_by_id(schema)
-    partition_by = [by_id[f["source-id"]]["name"]
-                    for f in spec["fields"]]
-    pfields = _partition_fields(schema, partition_by)
-    updates = updates.select(*[
-        F.col(f["name"]).cast(_ice_type_to_spark(f["type"]))
-        .alias(f["name"]) for f in schema["fields"]])
-
-    sid_next = max(s["snapshot-id"] for s in meta["snapshots"]) + 1
+            raise IcebergError(f"splice key {k!r} not in schema")
+    pfields = _table_partition_fields(meta, schema)
+    sid_next = max((s["snapshot-id"] for s in meta["snapshots"]),
+                   default=0) + 1
     seq_next = meta["last-sequence-number"] + 1
-    att = _attempt_id()
 
     dels_root = os.path.join(table_dir, "data",
-                             f"upsert-del-{sid_next}-{att}")
-    (updates.select(*keys).distinct().coalesce(1)
+                             f"eqdel-{sid_next}-{_attempt_id()}")
+    (keys.select(*[F.col(k).cast(_ice_type_to_spark(by_name[k]["type"]))
+                   for k in key_cols])
+     .distinct().coalesce(1)
      .write.mode("errorifexists").parquet(dels_root))
-    eq_ids = [by_name[k]["id"] for k in keys]
-    del_entries = [_data_file_entry(p, {}, schema, content=2,
-                                    equality_ids=eq_ids)
-                   for p in _list_parquet(dels_root)]
-    del_manifest = _write_manifest(table_dir, sid_next, seq_next,
-                                   del_entries, pfields, schema,
-                                   f"upsert-del-{att}")
-
-    data_root = os.path.join(table_dir, "data",
-                             f"upsert-{sid_next}-{att}")
-    w = updates.write.mode("errorifexists")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(data_root)
-    part_types = {p["name"]: p["ice_type"] for p in pfields}
-    data_entries = [
-        _data_file_entry(p, _hive_partition(p, data_root, part_types),
-                         schema)
-        for p in _list_parquet(data_root)]
-    data_manifest = _write_manifest(table_dir, sid_next, seq_next,
-                                    data_entries, pfields, schema,
-                                    f"upsert-data-{att}")
-    return _commit_snapshot(
-        table_dir,
-        _existing_manifests(meta) + [del_manifest, data_manifest],
-        "overwrite", meta, schema, pfields)
+    eq_ids = [by_name[k]["id"] for k in key_cols]
+    manifests = [_write_manifest(
+        table_dir, sid_next, seq_next,
+        [_data_file_entry(p, {}, schema, content=2, equality_ids=eq_ids)
+         for p in _list_parquet(dels_root)],
+        pfields, schema, "eqdel")]
+    operation = "delete"
+    if inserts is not None:
+        manifests.append(_write_data(_to_schema(inserts, schema),
+                                     table_dir, sid_next, seq_next,
+                                     pfields, schema, "data"))
+        operation = "overwrite"
+    return _commit_snapshot(table_dir,
+                            _existing_manifests(meta) + manifests,
+                            operation, meta, schema, pfields)

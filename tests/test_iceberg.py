@@ -247,7 +247,7 @@ def test_equality_delete_sequence_rule(spark, tmp_path):
     kill = langs[0]
     t = str(tmp_path / "t")
     ice.write_iceberg(docs, t)
-    ice.add_equality_deletes(
+    ice.splice(
         spark, t, docs.filter(docs.lang == kill).select("lang"),
         ["lang"])
     assert _rows(ice.read_iceberg(spark, t)) == _rows(
@@ -269,7 +269,7 @@ def test_pos_and_eq_deletes_compose(spark, tmp_path):
     t = str(tmp_path / "t")
     ice.write_iceberg(docs, t, partition_by=["lang"])
     ice.delete_where(spark, t, "doc_id % 5 = 0")
-    ice.add_equality_deletes(
+    ice.splice(
         spark, t, docs.filter(docs.lang == kill).select("lang"),
         ["lang"])
     assert _rows(ice.read_iceberg(spark, t)) == _rows(
@@ -342,7 +342,7 @@ def test_large_delete_side_pins_shuffle_hash(spark, tmp_path, monkeypatch):
     t = str(tmp_path / "t")
     ice.write_iceberg(docs, t)
     ice.delete_where(spark, t, "doc_id % 5 = 0")
-    ice.add_equality_deletes(
+    ice.splice(
         spark, t, docs.filter("doc_id % 3 = 0").select("lang").limit(1),
         ["lang"])
     want = _rows(ice.read_iceberg(spark, t))
@@ -477,7 +477,7 @@ def test_eq_delete_pre_rename_applies_post_rename(spark, tmp_path):
     ice.write_iceberg(
         spark.createDataFrame([(1, "x"), (2, "y"), (3, "x")],
                               schema="k long, s string"), t)
-    ice.add_equality_deletes(
+    ice.splice(
         spark, t, spark.createDataFrame([("x",)], ["s"]), ["s"])
     ice.evolve_schema(t, rename={"s": "tag"})
     got = ice.read_iceberg(spark, t)
@@ -820,7 +820,7 @@ def test_merge_upsert_single_atomic_snapshot(spark, tmp_path):
                .withColumn("n_chars", F.col("n_chars") + 1000)
                .unionByName(docs.limit(5).withColumn(
                    "doc_id", F.col("doc_id") + 5_000_000)))
-    sid = ice.merge_upsert(spark, t, updates, keys=["doc_id"])
+    sid = ice.splice(spark, t, updates, ["doc_id"], inserts=updates)
 
     # exactly ONE new snapshot carries both delete + append
     meta = ice.load_metadata(t)
@@ -835,11 +835,115 @@ def test_merge_upsert_single_atomic_snapshot(spark, tmp_path):
     # pre-upsert state intact via time travel
     assert _rows(ice.read_iceberg(spark, t, snapshot_id=sid - 1)) == pre
     # a second upsert on the same keys converges (idempotent re-apply)
-    ice.merge_upsert(spark, t, updates, keys=["doc_id"])
+    ice.splice(spark, t, updates, ["doc_id"], inserts=updates)
     assert _rows(ice.read_iceberg(spark, t)) == _rows(expected)
     # compaction materializes the MoR state away, content unchanged
     ice.compact_table(spark, t)
     assert _rows(ice.read_iceberg(spark, t)) == _rows(expected)
 
     with pytest.raises(ice.IcebergError, match="not in schema"):
-        ice.merge_upsert(spark, t, updates, keys=["nope"])
+        ice.splice(spark, t, updates, ["nope"], inserts=updates)
+
+
+def test_hint_one_behind_does_not_wedge_commits(spark, tmp_path):
+    """A crash after vN.metadata.json is published but before the
+    version hint is rewritten leaves the hint one behind; the next
+    commit must build on vN, not retry it forever."""
+    t = str(tmp_path / "t")
+    df = spark.range(4).selectExpr("id as k")
+    ice.write_iceberg(df, t)
+    ice.append_iceberg(df, t)
+    with open(os.path.join(t, "metadata", "version-hint.text"), "w") as fh:
+        fh.write("1")
+    ice.append_iceberg(df, t)
+    assert ice.load_metadata(t)["_loaded-version"] == 3
+    assert ice.read_iceberg(spark, t).count() == 12
+
+
+def test_conflict_loser_leaves_winner_manifests_intact(spark, tmp_path):
+    """A stale-parent writer fails at the metadata swap, but it has
+    already written its manifest and manifest list: those must not
+    land on the names the winner's snapshot references."""
+    t = str(tmp_path / "t")
+    ice.write_iceberg(spark.range(3).selectExpr("id as k"), t)
+    stale = ice.load_metadata(t)
+    ice.append_iceberg(spark.range(100, 102).selectExpr("id as k"), t)
+    with pytest.raises(ice.IcebergError, match="CommitConflict"):
+        ice._append(spark.range(900, 905).selectExpr("id as k"), t,
+                    partition_by=None, parent=stale)
+    assert sorted(r["k"] for r in ice.read_iceberg(spark, t).collect()) \
+        == [0, 1, 2, 100, 101]
+
+
+def test_read_changes_append_only_ranges(spark, tmp_path):
+    t = str(tmp_path / "t")
+    sids = [ice.write_iceberg(
+        spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string"),
+        t)]
+    for i in (1, 2):
+        sids.append(ice.append_iceberg(spark.createDataFrame(
+            [(i * 10, f"x{i}"), (i * 10 + 1, f"y{i}")],
+            "id long, v string"), t))
+    got = ice.read_changes(spark, t, sids[0], sids[2])
+    assert got.columns == ["id", "v"]
+    assert _rows(got) == [(10, "x1"), (11, "y1"), (20, "x2"), (21, "y2")]
+    assert _rows(ice.read_changes(spark, t, sids[1], sids[2])) == \
+        [(20, "x2"), (21, "y2")]
+    assert ice.read_changes(spark, t, sids[1], sids[1]).count() == 0
+    with pytest.raises(ice.IcebergError, match="not an ancestor"):
+        ice.read_changes(spark, t, sids[2], sids[1])
+
+    # a splice (equality delete + inserts) is not an append: any range
+    # containing it is rejected, ranges before it still read
+    s_splice = ice.splice(
+        spark, t, spark.createDataFrame([(1,)], "id long"), ["id"],
+        inserts=spark.createDataFrame([(1, "z")], "id long, v string"))
+    s_after = ice.append_iceberg(
+        spark.createDataFrame([(30, "w")], "id long, v string"), t)
+    with pytest.raises(ice.IcebergError, match="append-only"):
+        ice.read_changes(spark, t, sids[0], s_after)
+    assert _rows(ice.read_changes(spark, t, s_splice, s_after)) == \
+        [(30, "w")]
+    assert ice.read_changes(spark, t, sids[0], sids[2]).count() == 4
+    ice.compact_table(spark, t)
+    with pytest.raises(ice.IcebergError, match="'replace'"):
+        ice.read_changes(spark, t, s_after, ice.snapshot_ids(t)[-1])
+
+
+def test_splice_many_rows_per_key_and_drop_to_zero(spark, tmp_path):
+    """The multi-row-per-key splice the incremental merge state uses:
+    every prior row of a spliced key goes, all its insert rows come
+    in (a key with no inserts drops to zero), other keys are
+    untouched — one snapshot, no data file rewritten."""
+    t = str(tmp_path / "t")
+    base = [(u, i) for u in ("u1", "u2", "u3", "u4") for i in range(3)]
+    ice.write_iceberg(
+        spark.createDataFrame(base, "url string, i long"), t)
+    meta = ice.load_metadata(t)
+    files_before, _ = ice.plan_scan(meta, ice.select_snapshot(meta))
+    keys = spark.createDataFrame([("u1",), ("u2",), ("u3",)], "url string")
+    inserts = spark.createDataFrame(
+        [("u1", 10), ("u1", 11), ("u1", 12), ("u1", 13), ("u2", 20)],
+        "url string, i long")
+    ice.splice(spark, t, keys, ["url"], inserts=inserts)
+    # _rows orders columns by name: (i, url)
+    assert _rows(ice.read_iceberg(spark, t)) == sorted(
+        [(10, "u1"), (11, "u1"), (12, "u1"), (13, "u1"), (20, "u2")]
+        + [(i, "u4") for i in range(3)])
+
+    meta = ice.load_metadata(t)
+    assert len(meta["snapshots"]) == 2
+    assert meta["snapshots"][-1]["summary"]["operation"] == "overwrite"
+    data, deletes = ice.plan_scan(meta, ice.select_snapshot(meta))
+    assert {f.path for f in files_before} <= {f.path for f in data}
+    assert {d.kind for d in deletes} == {"eq"}
+    assert all(f.seq == 2 for f in data
+               if f.path not in {b.path for b in files_before})
+
+    # delete-only splice: the keys' rows go, nothing is appended
+    ice.splice(spark, t, spark.createDataFrame([("u4",)], "url string"),
+               ["url"])
+    meta = ice.load_metadata(t)
+    assert meta["snapshots"][-1]["summary"]["operation"] == "delete"
+    assert ice.read_iceberg(spark, t).filter("url = 'u4'").count() == 0
+    assert ice.read_iceberg(spark, t).count() == 5

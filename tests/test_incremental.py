@@ -1,5 +1,5 @@
 """Incremental merge (plans/incremental.py): splicing a url-keyed page
-delta into snapshot state must be EXACTLY equivalent to a full rebuild
+delta into Iceberg state must be EXACTLY equivalent to a full rebuild
 over the post-delta corpus — same assignment fingerprint, same output
 sets, same tile membership — while recomputing only the affected-cell
 closure (asserted: the sub-run touches a strict subset of addresses).
@@ -15,8 +15,8 @@ from pyspark.sql import functions as F
 from mergeaddressesandbuildings_spark import config
 from mergeaddressesandbuildings_spark.functions import cells_sql
 from mergeaddressesandbuildings_spark.plans import incremental as inc
+from mergeaddressesandbuildings_spark.sources import iceberg as ice
 from mergeaddressesandbuildings_spark.sources import pages as pg
-from mergeaddressesandbuildings_spark.sources import snapshots as snap
 
 N_PAGES = 140
 # level 15 (~1.2 km × 600 m cells) instead of the default 12 (~10 km):
@@ -145,27 +145,27 @@ def test_incremental_matches_run_merge(spark, state):
 def test_deleted_url_rows_are_gone(spark, state):
     state_dir, _, _, _ = state
     for tbl in ("records", "addresses", "buildings"):
-        df = snap.read_snapshot(spark, os.path.join(state_dir, tbl))
+        df = ice.read_iceberg(spark, os.path.join(state_dir, tbl))
         gone = df.filter(F.col("url").isin([_url(i) for i in DELETED]))
         assert gone.count() == 0, tbl
 
 
 def test_second_delta_stays_exact(spark, state, tmp_path):
     """Chained absorption: a SECOND delta applied to already-spliced
-    state (whose files now mix clustered originals with rewrite
-    commits) must still match a from-scratch rebuild exactly."""
+    state — copied as a plain tree, then compacted so the first
+    splice's equality deletes are materialized — must still match a
+    from-scratch rebuild exactly."""
     state_dir, _, existing, root = state
     import shutil
 
     chain_dir = os.path.join(str(tmp_path), "state_chain")
+    # the copy's metadata still names the original's files by absolute
+    # path; commits on the copy only ADD files under the copy's own
+    # tree and never modify existing ones, so the original is
+    # untouched (expiring snapshots on the copy would not be)
     shutil.copytree(state_dir, chain_dir)
-    # a cp'd snapshot table still references the ORIGINAL's data files
-    # (snapshots.py RELOCATION WARNING) — repoint the copy at its own
-    # tree so this test models the supported relocation pattern
     for tbl in inc._TABLES:
-        tdir = os.path.join(chain_dir, tbl)
-        if snap.current_snapshot_id(tdir) is not None:
-            assert snap.relocate(tdir, state_dir, chain_dir) > 0
+        ice.compact_table(spark, os.path.join(chain_dir, tbl))
     # state written by older builds carries a since-removed
     # "salt_threshold" meta key; apply_delta must ignore it
     meta_path = inc._meta_path(chain_dir)
@@ -217,8 +217,8 @@ def test_splice_plan_shape(spark, state):
     assert "Scan ExistingRDD" in plan or "LocalTableScan" in plan
     assert "Exchange" not in plan
 
-    addresses = snap.read_snapshot(spark,
-                                   os.path.join(state_dir, "addresses"))
+    addresses = ice.read_iceberg(spark,
+                                 os.path.join(state_dir, "addresses"))
     semi = addresses.join(local, "cell", "left_semi")
     semi.collect()  # run THIS query execution so AQE finalizes it
     splan = semi._jdf.queryExecution().executedPlan().toString()
@@ -242,12 +242,19 @@ def test_localize_cap_falls_back(spark):
 
 
 def test_records_table_commit_is_file_level(state):
-    """The records splice must be copy-on-write: the new snapshot
-    keeps at least one untouched v1 data file by reference."""
+    """The records splice is merge-on-read: ONE snapshot that keeps
+    every full-build data file by reference, adds equality-delete
+    file(s) and rewrites no data file — its only new data files are
+    the inserts, at the splice's own sequence number."""
     state_dir, _, _, _ = state
-    log = snap.snapshot_log(os.path.join(state_dir, "records"))
-    assert [e["operation"] for e in log] == ["overwrite", "replace"]
-    cur = snap.current_snapshot_id(os.path.join(state_dir, "records"))
-    m = snap._load_manifest(os.path.join(state_dir, "records"), cur)
-    assert m["n_kept_files"] >= 1
-    assert m["n_rewritten_files"] >= 1
+    meta = ice.load_metadata(os.path.join(state_dir, "records"))
+    built, spliced = meta["snapshots"]
+    assert spliced["summary"]["operation"] == "overwrite"
+    before, _ = ice.plan_scan(meta, built)
+    data, deletes = ice.plan_scan(meta, spliced)
+    old = {f.path for f in before}
+    assert old <= {f.path for f in data}
+    seq = spliced["sequence-number"]
+    assert deletes and all(d.kind == "eq" and d.seq == seq
+                           for d in deletes)
+    assert all(f.seq == seq for f in data if f.path not in old)

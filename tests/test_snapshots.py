@@ -1,19 +1,37 @@
-"""Snapshot table layer (sources/snapshots.py): append/overwrite
-chains, time travel, incremental changes-reads, commit atomicity
-(orphan files invisible), schema freeze, concurrent-writer guard."""
+"""Snapshot lifecycle of the table layer (sources/iceberg.py): append
+chains and time travel, incremental changes-reads, keyed splices
+(merge-on-read upsert/delete), commit atomicity (uncommitted files
+stay invisible), per-snapshot schemas, optimistic-concurrency guards,
+compaction and expiry."""
 
 from __future__ import annotations
 
-import json
 import os
 
 import pytest
+from pyspark.errors import AnalysisException
 
-from mergeaddressesandbuildings_spark.sources import snapshots as S
+from mergeaddressesandbuildings_spark.sources import iceberg as ice
 
 
 def rows_of(df):
     return sorted(tuple(r) for r in df.collect())
+
+
+def _kv(spark, rows):
+    return spark.createDataFrame(rows, "id long, v string")
+
+
+def _ids(spark, ids):
+    return spark.createDataFrame([(i,) for i in ids], "id long")
+
+
+def _files(tdir, sid=None):
+    """(data file paths, delete tasks) of snapshot ``sid`` (current
+    when None), planned from metadata."""
+    meta = ice.load_metadata(tdir)
+    data, deletes = ice.plan_scan(meta, ice.select_snapshot(meta, sid))
+    return {t.path for t in data}, deletes
 
 
 @pytest.fixture()
@@ -22,88 +40,115 @@ def tdir(tmp_path):
 
 
 def test_append_chain_and_time_travel(spark, tdir):
-    a = spark.createDataFrame([(1, "a"), (2, "b")], ["id", "v"])
-    b = spark.createDataFrame([(3, "c")], ["id", "v"])
-    m1 = S.write_snapshot(a, tdir)
-    m2 = S.write_snapshot(b, tdir)
-    assert (m1["snapshot_id"], m2["snapshot_id"]) == (1, 2)
-    assert m2["parent_id"] == 1 and m2["n_rows"] == 3
-    assert rows_of(S.read_snapshot(spark, tdir)) == \
+    s1 = ice.write_iceberg(_kv(spark, [(1, "a"), (2, "b")]), tdir)
+    s2 = ice.append_iceberg(_kv(spark, [(3, "c")]), tdir)
+    assert (s1, s2) == (1, 2)
+    snaps = ice.load_metadata(tdir)["snapshots"]
+    assert "parent-snapshot-id" not in snaps[0]
+    assert snaps[1]["parent-snapshot-id"] == s1
+    assert rows_of(ice.read_iceberg(spark, tdir)) == \
         [(1, "a"), (2, "b"), (3, "c")]
-    assert rows_of(S.read_snapshot(spark, tdir, snapshot_id=1)) == \
+    assert rows_of(ice.read_iceberg(spark, tdir, snapshot_id=s1)) == \
         [(1, "a"), (2, "b")]
 
 
 def test_overwrite_keeps_history(spark, tdir):
-    S.write_snapshot(spark.createDataFrame([(1,)], ["id"]), tdir)
-    S.write_snapshot(spark.createDataFrame([(9,)], ["id"]),
-                     tdir, mode="overwrite")
-    assert rows_of(S.read_snapshot(spark, tdir)) == [(9,)]
-    assert rows_of(S.read_snapshot(spark, tdir, 1)) == [(1,)]
-    log = S.snapshot_log(tdir)
-    assert [e["operation"] for e in log] == ["append", "overwrite"]
-    assert [e["n_rows"] for e in log] == [1, 1]
+    s1 = ice.write_iceberg(_ids(spark, [1]), tdir)
+    # replace the whole table: delete every current key, insert anew
+    ice.splice(spark, tdir, ice.read_iceberg(spark, tdir), ["id"],
+               inserts=_ids(spark, [9]))
+    assert rows_of(ice.read_iceberg(spark, tdir)) == [(9,)]
+    assert rows_of(ice.read_iceberg(spark, tdir, snapshot_id=s1)) == [(1,)]
+    log = ice.metadata_table(spark, tdir, "snapshots") \
+        .orderBy("snapshot_id").collect()
+    assert [r["operation"] for r in log] == ["append", "overwrite"]
 
 
 def test_read_changes_incremental(spark, tdir):
-    for i in range(3):
-        S.write_snapshot(
-            spark.createDataFrame([(i * 10 + j,) for j in range(2)],
-                                  ["id"]), tdir)
-    assert rows_of(S.read_changes(spark, tdir, 1, 3)) == \
+    ice.write_iceberg(_ids(spark, [0, 1]), tdir)
+    for i in (1, 2):
+        ice.append_iceberg(_ids(spark, [i * 10, i * 10 + 1]), tdir)
+    assert rows_of(ice.read_changes(spark, tdir, 1, 3)) == \
         [(10,), (11,), (20,), (21,)]
-    assert S.read_changes(spark, tdir, 2, 2).count() == 0
-    S.write_snapshot(spark.createDataFrame([(99,)], ["id"]),
-                     tdir, mode="overwrite")
-    with pytest.raises(ValueError, match="overwrite"):
-        S.read_changes(spark, tdir, 1, 4)
+    assert ice.read_changes(spark, tdir, 2, 2).count() == 0
+    s4 = ice.splice(spark, tdir, ice.read_iceberg(spark, tdir), ["id"],
+                    inserts=_ids(spark, [99]))
+    with pytest.raises(ice.IcebergError, match="overwrite"):
+        ice.read_changes(spark, tdir, 1, s4)
 
 
 def test_orphan_files_invisible_and_retry_clean(spark, tdir):
-    S.write_snapshot(spark.createDataFrame([(1,)], ["id"]), tdir)
-    # simulate a crashed half-commit: data written, no manifest swap
-    crash_dir = os.path.join(tdir, "data", "s2-deadbeef")
-    spark.createDataFrame([(666,)], ["id"]).write.parquet(crash_dir)
-    assert rows_of(S.read_snapshot(spark, tdir)) == [(1,)]
+    ice.write_iceberg(_ids(spark, [1]), tdir)
+    # simulate a crashed half-commit: data written, no metadata swap
+    crash_dir = os.path.join(tdir, "data", "data-2-deadbeef")
+    _ids(spark, [666]).write.parquet(crash_dir)
+    assert rows_of(ice.read_iceberg(spark, tdir)) == [(1,)]
     # the retry commits cleanly into its own attempt dir and the
     # orphan rows stay invisible forever
-    S.write_snapshot(spark.createDataFrame([(2,)], ["id"]), tdir)
-    assert rows_of(S.read_snapshot(spark, tdir)) == [(1,), (2,)]
+    ice.append_iceberg(_ids(spark, [2]), tdir)
+    assert rows_of(ice.read_iceberg(spark, tdir)) == [(1,), (2,)]
+    assert not any(p.startswith(crash_dir) for p in _files(tdir)[0])
 
 
-def test_concurrent_writer_guard(spark, tdir):
-    S.write_snapshot(spark.createDataFrame([(1,)], ["id"]), tdir)
-    # a racing writer already committed manifest 2
-    with open(os.path.join(tdir, "snap", "2.json"), "w") as f:
-        json.dump({}, f)
-    with pytest.raises(RuntimeError, match="concurrent writer"):
-        S.write_snapshot(spark.createDataFrame([(2,)], ["id"]), tdir)
+def test_concurrent_writer_guard(spark, tdir, monkeypatch):
+    """Two splices planned from the same parent: the second to reach
+    the metadata swap conflicts and publishes nothing."""
+    ice.write_iceberg(_kv(spark, [(1, "a"), (2, "b")]), tdir)
+    parent = ice.load_metadata(tdir)
+    ice.splice(spark, tdir, _ids(spark, [1]),
+               ["id"], inserts=_kv(spark, [(1, "A")]))
+    md = os.path.join(tdir, "metadata")
+    before = sorted(os.listdir(md))
+    # the racing writer read its metadata before the winner committed
+    monkeypatch.setattr(ice, "load_metadata", lambda _d: dict(parent))
+    with pytest.raises(ice.IcebergError, match="concurrent"):
+        ice.splice(spark, tdir, _ids(spark, [2]),
+                   ["id"], inserts=_kv(spark, [(2, "B")]))
+    monkeypatch.undo()
+    # no new or partial metadata version, hint unchanged
+    assert not any(n.endswith(".tmp") for n in os.listdir(md))
+    assert sorted(n for n in os.listdir(md)
+                  if n.endswith(".metadata.json")) == \
+        sorted(n for n in before if n.endswith(".metadata.json"))
+    with open(os.path.join(md, "version-hint.text")) as fh:
+        assert fh.read().strip() == "2"
+    assert rows_of(ice.read_iceberg(spark, tdir)) == [(1, "A"), (2, "b")]
 
 
 def test_missing_snapshot_errors(spark, tdir):
-    with pytest.raises(FileNotFoundError):
-        S.read_snapshot(spark, tdir)
-    S.write_snapshot(spark.createDataFrame([(1,)], ["id"]), tdir)
-    with pytest.raises(FileNotFoundError, match="snapshot 7"):
-        S.read_snapshot(spark, tdir, 7)
+    with pytest.raises(ice.IcebergError, match="no iceberg table"):
+        ice.read_iceberg(spark, tdir)
+    ice.write_iceberg(_ids(spark, [1]), tdir)
+    with pytest.raises(ice.IcebergError, match="snapshot 7"):
+        ice.read_iceberg(spark, tdir, snapshot_id=7)
 
 
 def test_schema_frozen_per_snapshot(spark, tdir):
-    S.write_snapshot(spark.createDataFrame([(1, "x")], ["id", "v"]), tdir)
-    m = S._load_manifest(tdir, 1)
-    names = [f["name"] for f in m["schema"]["fields"]]
-    assert names == ["id", "v"]
+    s1 = ice.write_iceberg(_kv(spark, [(1, "x")]), tdir)
+    ice.evolve_schema(tdir, add=[("w", "long")], rename={"v": "val"})
+    s2 = ice.append_iceberg(
+        spark.createDataFrame([(2, "y", 7)], "id long, val string, w long"),
+        tdir)
+    meta = ice.load_metadata(tdir)
+    names = {sid: [f["name"] for f in ice._schema_for_id(meta, sch)
+                   ["fields"]]
+             for sid, sch in ice._snapshot_schema_ids(meta).items()}
+    assert names == {s1: ["id", "v"], s2: ["id", "val", "w"]}
+    # time travel projects the snapshot's own schema
+    old = ice.read_iceberg(spark, tdir, snapshot_id=s1)
+    assert old.columns == ["id", "v"]
+    assert rows_of(old) == [(1, "x")]
+    assert rows_of(ice.read_iceberg(spark, tdir)) == \
+        [(1, "x", None), (2, "y", 7)]
 
 
-# -------------------------------------------------------- merge_upsert
+# -------------------------------------------------------- keyed splice
 
 
 def _seed(spark, tdir):
     """Two appends with disjoint key ranges -> two file groups."""
-    S.write_snapshot(
-        spark.createDataFrame([(1, "a"), (2, "b")], ["id", "v"]), tdir)
-    S.write_snapshot(
-        spark.createDataFrame([(10, "x"), (11, "y")], ["id", "v"]), tdir)
+    ice.write_iceberg(_kv(spark, [(1, "a"), (2, "b")]), tdir)
+    ice.append_iceberg(_kv(spark, [(10, "x"), (11, "y")]), tdir)
 
 
 def test_merge_upsert_semantics(spark, tdir):
@@ -114,331 +159,181 @@ def test_merge_upsert_semantics(spark, tdir):
          (10, None, True),    # delete
          (555, None, True)],  # delete of absent key: no-op
         "id bigint, v string, is_del boolean")
-    m = S.merge_upsert(ch, tdir, ["id"], delete_col="is_del")
-    assert m["operation"] == "merge" and m["n_rows"] == 4
-    assert rows_of(S.read_snapshot(spark, tdir)) == \
+    sid = ice.splice(spark, tdir, ch, ["id"],
+                     inserts=ch.filter("not is_del").drop("is_del"))
+    meta = ice.load_metadata(tdir)
+    assert ice.select_snapshot(meta, sid)["summary"]["operation"] == \
+        "overwrite"
+    assert rows_of(ice.read_iceberg(spark, tdir)) == \
         [(1, "a"), (2, "B!"), (11, "y"), (99, "new")]
-    # time travel across the merge still sees the old state
-    assert rows_of(S.read_snapshot(spark, tdir, 2)) == \
+    # time travel across the splice still sees the old state
+    assert rows_of(ice.read_iceberg(spark, tdir, snapshot_id=2)) == \
         [(1, "a"), (2, "b"), (10, "x"), (11, "y")]
 
 
 def test_merge_upsert_rewrites_only_affected_files(spark, tdir):
     _seed(spark, tdir)
-    before = S._load_manifest(tdir, 2)
-    # snapshot 1's files hold ids {1,2}; touch only id 10 (snapshot 2's)
-    ch = spark.createDataFrame([(10, "X")], ["id", "v"])
-    m = S.merge_upsert(ch, tdir, ["id"])
-    s1_files = set(S._load_manifest(tdir, 1)["files"])
-    assert s1_files <= set(m["files"])          # untouched: by reference
-    # granularity is per FILE, not per commit: of snapshot 2's part
-    # files only the one(s) containing id 10 get rewritten
-    kept_old = set(before["files"]) & set(m["files"])
-    assert m["n_rewritten_files"] == \
-        len(before["files"]) - len(kept_old) >= 1
-    assert m["n_kept_files"] == len(kept_old)
-    rewritten_rows = spark.read.parquet(
-        *(set(before["files"]) - kept_old)).collect()
-    assert any(r["id"] == 10 for r in rewritten_rows)
-    assert rows_of(S.read_snapshot(spark, tdir)) == \
+    before, _ = _files(tdir)
+    # touch only id 10 (snapshot 2's rows)
+    ch = _kv(spark, [(10, "X")])
+    sid = ice.splice(spark, tdir, ch, ["id"], inserts=ch)
+    after, deletes = _files(tdir)
+    # merge-on-read: every earlier data file is kept by reference and
+    # none is rewritten; the only new data is the insert itself
+    assert before <= after
+    assert rows_of(spark.read.parquet(*(after - before))) == [(10, "X")]
+    # the delete side names just the spliced key, at the new sequence
+    assert {d.kind for d in deletes} == {"eq"}
+    assert rows_of(spark.read.parquet(*{d.path for d in deletes})) == \
+        [(10,)]
+    seq = ice.select_snapshot(ice.load_metadata(tdir), sid)[
+        "sequence-number"]
+    assert {d.seq for d in deletes} == {seq}
+    assert rows_of(ice.read_iceberg(spark, tdir).filter("id = 10")) == \
+        [(10, "X")]
+    assert rows_of(ice.read_iceberg(spark, tdir)) == \
         [(1, "a"), (2, "b"), (10, "X"), (11, "y")]
 
 
 def test_merge_upsert_insert_only_touches_nothing(spark, tdir):
     _seed(spark, tdir)
-    m = S.merge_upsert(
-        spark.createDataFrame([(50, "q")], ["id", "v"]), tdir, ["id"])
-    assert m["n_rewritten_files"] == 0 and m["n_rows"] == 5
+    before, _ = _files(tdir)
+    ch = _kv(spark, [(50, "q")])
+    ice.splice(spark, tdir, ch, ["id"], inserts=ch)
+    after, _ = _files(tdir)
+    assert before <= after and len(after - before) >= 1
+    assert ice.read_iceberg(spark, tdir).count() == 5
 
 
 def test_merge_upsert_guards(spark, tdir):
     _seed(spark, tdir)
-    with pytest.raises(ValueError, match="duplicate keys"):
-        S.merge_upsert(
-            spark.createDataFrame([(1, "p"), (1, "q")], ["id", "v"]),
-            tdir, ["id"])
-    with pytest.raises(ValueError, match="columns"):
-        S.merge_upsert(
-            spark.createDataFrame([(1,)], ["id"]), tdir, ["id"])
-    with pytest.raises(FileNotFoundError):
-        S.merge_upsert(
-            spark.createDataFrame([(1, "a")], ["id", "v"]),
-            str(tdir) + "_absent", ["id"])
+    n_snaps = len(ice.snapshot_ids(tdir))
+    with pytest.raises(ice.IcebergError, match="not in schema"):
+        ice.splice(spark, tdir, _ids(spark, [1]), ["nope"],
+                   inserts=_kv(spark, [(1, "p")]))
+    # inserts lacking a table column fail before anything is committed
+    with pytest.raises(AnalysisException):
+        ice.splice(spark, tdir, _ids(spark, [1]), ["id"],
+                   inserts=_ids(spark, [1]))
+    with pytest.raises(ice.IcebergError, match="no iceberg table"):
+        ice.splice(spark, str(tdir) + "_absent", _ids(spark, [1]), ["id"],
+                   inserts=_kv(spark, [(1, "a")]))
+    assert len(ice.snapshot_ids(tdir)) == n_snaps
+    assert rows_of(ice.read_iceberg(spark, tdir)) == \
+        [(1, "a"), (2, "b"), (10, "x"), (11, "y")]
 
 
 def test_read_changes_rejects_merge(spark, tdir):
     _seed(spark, tdir)
-    S.merge_upsert(spark.createDataFrame([(1, "z")], ["id", "v"]),
-                   tdir, ["id"])
-    with pytest.raises(ValueError, match="append-only"):
-        S.read_changes(spark, tdir, 1, 3)
+    ch = _kv(spark, [(1, "z")])
+    s3 = ice.splice(spark, tdir, ch, ["id"], inserts=ch)
+    with pytest.raises(ice.IcebergError, match="append-only"):
+        ice.read_changes(spark, tdir, 1, s3)
 
 
 # ------------------------------------------- compaction + expiry
 
 
 def test_compact_preserves_rows_and_prunes_files(spark, tdir):
-    for i in range(4):  # 4 tiny appends -> many small files
-        S.write_snapshot(
-            spark.createDataFrame([(i * 10 + j, f"v{i}{j}")
-                                   for j in range(3)], ["id", "v"]),
-            tdir)
-    before = rows_of(S.read_snapshot(spark, tdir))
-    pm = S._load_manifest(tdir, 4)
-    m = S.compact_files(spark, tdir, small_file_bytes=32 << 20)
-    assert m["operation"] == "compact"
-    assert m["n_compacted_files"] == len(pm["files"])
-    assert len(m["files"]) < len(pm["files"])
-    assert m["n_rows"] == pm["n_rows"]
-    assert rows_of(S.read_snapshot(spark, tdir)) == before
+    ice.write_iceberg(_kv(spark, [(j, f"v0{j}") for j in range(3)]), tdir)
+    for i in range(1, 4):  # 4 tiny appends -> many small files
+        ice.append_iceberg(
+            _kv(spark, [(i * 10 + j, f"v{i}{j}") for j in range(3)]), tdir)
+    before = rows_of(ice.read_iceberg(spark, tdir))
+    files_before, _ = _files(tdir)
+    sid = ice.compact_table(spark, tdir)
+    meta = ice.load_metadata(tdir)
+    assert ice.select_snapshot(meta, sid)["summary"]["operation"] == \
+        "replace"
+    files_after, _ = _files(tdir)
+    assert not files_before & files_after
+    assert len(files_after) < len(files_before)
+    assert rows_of(ice.read_iceberg(spark, tdir)) == before
     # history before the compaction still readable
-    assert len(rows_of(S.read_snapshot(spark, tdir, 2))) == 6
-
-
-def test_compact_skips_big_files(spark, tdir):
-    S.write_snapshot(
-        spark.createDataFrame([(1, "a"), (2, "b")], ["id", "v"]), tdir)
-    m = S.compact_files(spark, tdir, small_file_bytes=1)  # all "big"
-    assert m["snapshot_id"] == 1  # no-op: parent manifest returned
+    assert len(rows_of(ice.read_iceberg(spark, tdir, snapshot_id=2))) == 6
 
 
 def test_expire_snapshots_reclaims_unreferenced_files(spark, tdir):
-    S.write_snapshot(
-        spark.createDataFrame([(1, "a")], ["id", "v"]), tdir)
-    S.write_snapshot(
-        spark.createDataFrame([(1, "A2")], ["id", "v"]),
-        tdir, mode="overwrite")
-    S.write_snapshot(
-        spark.createDataFrame([(2, "b")], ["id", "v"]), tdir)
-    s1_files = S._load_manifest(tdir, 1)["files"]
-    r = S.expire_snapshots(tdir, keep_last=2)
-    assert r["expired_snapshot_ids"] == [1]
-    # snapshot 1's files are unreferenced by 2/3 -> deleted from disk
-    assert r["n_deleted_files"] == len(s1_files)
-    assert not any(os.path.exists(f) for f in s1_files)
+    ice.write_iceberg(_kv(spark, [(1, "a")]), tdir)
+    ch = _kv(spark, [(1, "A2")])
+    ice.splice(spark, tdir, ch, ["id"], inserts=ch)
+    s3 = ice.compact_table(spark, tdir)   # rewrites: old files unreferenced
+    ice.append_iceberg(_kv(spark, [(2, "b")]), tdir)
+    s1_files, _ = _files(tdir, 1)
+    s2_files, s2_dels = _files(tdir, 2)
+    r = ice.expire_snapshots(tdir, keep_last=2)
+    assert r["expired_snapshots"] == 2
+    # snapshots 1/2's data and delete files are unreferenced by 3/4
+    gone = s1_files | s2_files | {d.path for d in s2_dels}
+    assert r["deleted_files"] >= len(gone)
+    assert not any(os.path.exists(f) for f in gone)
     # retained chain intact, current readable, expired id errors cleanly
-    assert rows_of(S.read_snapshot(spark, tdir)) == [(1, "A2"), (2, "b")]
-    assert rows_of(S.read_snapshot(spark, tdir, 2)) == [(1, "A2")]
-    with pytest.raises(FileNotFoundError):
-        S.read_snapshot(spark, tdir, 1)
-    assert [e["snapshot_id"] for e in S.snapshot_log(tdir)] == [2, 3]
+    assert rows_of(ice.read_iceberg(spark, tdir)) == [(1, "A2"), (2, "b")]
+    assert rows_of(ice.read_iceberg(spark, tdir, snapshot_id=s3)) == \
+        [(1, "A2")]
+    with pytest.raises(ice.IcebergError, match="not found"):
+        ice.read_iceberg(spark, tdir, snapshot_id=1)
+    assert ice.snapshot_ids(tdir) == [3, 4]
 
 
 def test_expire_keeps_files_still_referenced(spark, tdir):
-    # append chain: snapshot 3 references snapshots 1-3's files, so
-    # expiring 1 and 2 must delete NOTHING
-    for i in range(3):
-        S.write_snapshot(
-            spark.createDataFrame([(i, "x")], ["id", "v"]), tdir)
-    r = S.expire_snapshots(tdir, keep_last=1)
-    assert r["expired_snapshot_ids"] == [1, 2]
-    assert r["n_deleted_files"] == 0
-    assert rows_of(S.read_snapshot(spark, tdir)) == \
+    # append chain: snapshot 3 references snapshots 1-3's data files
+    # and manifests, so expiring 1 and 2 deletes only their manifest
+    # lists
+    ice.write_iceberg(_kv(spark, [(0, "x")]), tdir)
+    for i in (1, 2):
+        ice.append_iceberg(_kv(spark, [(i, "x")]), tdir)
+    live, _ = _files(tdir)
+    r = ice.expire_snapshots(tdir, keep_last=1)
+    assert r == {"expired_snapshots": 2, "deleted_files": 2}
+    assert all(os.path.exists(f) for f in live)
+    assert rows_of(ice.read_iceberg(spark, tdir)) == \
         [(0, "x"), (1, "x"), (2, "x")]
 
 
 def test_expire_guard(spark, tdir):
-    S.write_snapshot(spark.createDataFrame([(1, "a")], ["id", "v"]),
-                     tdir)
-    with pytest.raises(ValueError):
-        S.expire_snapshots(tdir, keep_last=0)
+    ice.write_iceberg(_kv(spark, [(1, "a")]), tdir)
+    with pytest.raises(ice.IcebergError, match=">= 1"):
+        ice.expire_snapshots(tdir, keep_last=0)
+    with pytest.raises(ice.IcebergError, match="exactly one"):
+        ice.expire_snapshots(tdir, keep_last=1, older_than_ms=0)
+    assert ice.snapshot_ids(tdir) == [1]
 
 
-# ------------------------------------- clustering-contract survival
-
-
-def test_cluster_by_survives_maintenance(spark, tdir):
-    """The manifest's cluster_by contract (write_snapshot docstring)
-    must survive replace_keys rewrites and compact_files, files must
-    come out locally SORTED by the cluster columns (parquet encoding),
-    and compaction must not collapse a multi-MB table below the
-    session's scan parallelism (the measured 4x winner-recompute
-    slowdown: floor-less bin-packing left 5 unsplittable files, so
-    every pre-shuffle map stage ran ~serial)."""
-    import pyarrow.parquet as pq
-    from pyspark.sql import functions as F
-
-    # ~400k rows with an incompressible payload -> a table big enough
-    # (>#cores MiB) for the parallelism floor to be observable
-    df = (spark.range(400_000)
-          .withColumn("url", F.concat(F.lit("u"),
-                                      (F.col("id") % 1000).cast("string")))
-          .withColumn("payload", F.sha2(F.col("id").cast("string"), 256)))
-    m0 = S.write_snapshot(df.repartition(8, "url"), tdir,
-                          mode="overwrite", cluster_by=["url"])
-    assert m0["cluster_by"] == {"cols": ["url"], "kind": "hash"}
-
-    # keyed splice: contract carried, rewrite locally sorted
-    keys = spark.createDataFrame([("u7",), ("u13",)], ["url"])
-    ins = (spark.range(50)
-           .withColumn("url", F.lit("u7"))
-           .withColumn("payload", F.lit("x"))
-           .select("id", "url", "payload"))
-    m1 = S.replace_keys(spark, tdir, ["url"], keys, ins)
-    assert m1["cluster_by"] == {"cols": ["url"], "kind": "hash"}
-
-    before = S.read_snapshot(spark, tdir)
-    n_before = before.count()
-    m2 = S.compact_files(spark, tdir, small_file_bytes=512 << 20)
-    assert m2["cluster_by"] == {"cols": ["url"], "kind": "hash"}
-    assert S.read_snapshot(spark, tdir).count() == n_before
-
-    # parallelism floor: a ~25 MB table must not collapse to 1-2 files
-    dp = spark.sparkContext.defaultParallelism
-    total_mb = sum(os.path.getsize(f) for f in m2["files"]) >> 20
-    assert len(m2["files"]) >= min(dp, max(1, total_mb))
-
-    # every compacted file is internally sorted by the cluster column
-    # (what keeps RLE/dictionary pages long-run across maintenance)
-    for f in m2["added_files"]:
-        urls = pq.read_table(f, columns=["url"])["url"].to_pylist()
-        assert urls == sorted(urls), f"unsorted cluster col in {f}"
-
-    # hash clustering: each key maps to exactly one compacted file
-    hits = {}
-    for f in m2["added_files"]:
-        for u in set(pq.read_table(f, columns=["url"])["url"].to_pylist()):
-            hits.setdefault(u, set()).add(f)
-    assert all(len(fs) == 1 for fs in hits.values()), \
-        "a url hash bucket was split across compacted files"
+# ---------------------------------------------- optimistic concurrency
 
 
 def test_racing_commits_conflict_not_lost_update(spark, tdir):
-    """Round-3 verdict task 7: two writers that both planned from the
-    same parent must NOT both commit — the loser raises
-    SnapshotConflictError at the exclusive manifest create, the
-    winner's rows are intact, and the pointer never regresses."""
-    S.write_snapshot(spark.createDataFrame([(1, "a")], ["id", "v"]), tdir)
-    pm = S._load_manifest(tdir, 1)
-    # two racing writers both compute sid=2 from parent=1; writer A
-    # lands first through the public path
-    a = spark.createDataFrame([(2, "A")], ["id", "v"])
-    S.write_snapshot(a, tdir)
-    # writer B raced: it already passed planning (sid computed before
-    # A's commit) and now reaches the commit point with stale state
-    files_b, n_b = S._write_data_dir(
-        spark.createDataFrame([(3, "B")], ["id", "v"]), tdir, 2)
-    with pytest.raises(S.SnapshotConflictError, match="concurrent"):
-        S._commit(tdir, 2, 1, "append", pm["files"] + files_b, files_b,
-                  pm["n_rows"] + n_b, n_b, pm["schema"])
+    """Two writers that both planned from the same parent must NOT
+    both commit — the loser raises CommitConflict at the exclusive
+    metadata-version create, the winner's rows are intact, and the
+    pointer never regresses."""
+    ice.write_iceberg(_kv(spark, [(1, "a")]), tdir)
+    stale = ice.load_metadata(tdir)       # writer B plans from v1
+    sa = ice.append_iceberg(_kv(spark, [(2, "A")]), tdir)  # A lands
+    with pytest.raises(ice.IcebergError, match="concurrent"):
+        ice._append(_kv(spark, [(3, "B")]), tdir, partition_by=None,
+                    parent=stale)
     # lost-update impossibility: A's commit is the live state, B's
     # rows are invisible orphans
-    assert S.current_snapshot_id(tdir) == 2
-    assert rows_of(S.read_snapshot(spark, tdir)) == [(1, "a"), (2, "A")]
+    assert ice.load_metadata(tdir)["current-snapshot-id"] == sa
+    assert rows_of(ice.read_iceberg(spark, tdir)) == [(1, "a"), (2, "A")]
 
 
 def test_stale_writer_cannot_regress_pointer(spark, tdir):
-    """A writer whose snapshot id was freed by expiry must not move
-    the pointer backwards: the expected-parent re-check fires."""
-    for i in range(3):
-        S.write_snapshot(spark.createDataFrame([(i,)], ["id"]), tdir)
-    pm = S._load_manifest(tdir, 3)
-    S.expire_snapshots(tdir, keep_last=1)  # frees manifests 1 and 2
-    files, n = S._write_data_dir(
-        spark.createDataFrame([(9,)], ["id"]), tdir, 2)
-    with pytest.raises(S.SnapshotConflictError, match="parent"):
-        S._commit(tdir, 2, 1, "append", files, files, n, n, pm["schema"])
-    assert S.current_snapshot_id(tdir) == 3
-    # the conflicted manifest was rolled back, not left blocking id 2
-    assert not os.path.exists(os.path.join(tdir, "snap", "2.json"))
-
-
-def test_replace_keys_prunes_via_hash_buckets(spark, tdir):
-    """ADVICE round 3 (medium): keyed splices must NOT scan the key
-    column of every live file — hash-clustered tables prune via the
-    manifest's per-file xxhash64 bucket sets, so commit I/O is
-    O(delta + hit files)."""
-    from pyspark.sql import functions as F
-
-    df = (spark.range(4000)
-          .withColumn("url", F.concat(F.lit("u"),
-                                      (F.col("id") % 500).cast("string"))))
-    m0 = S.write_snapshot(df.repartition(16, "url"), tdir,
-                          mode="overwrite", cluster_by=["url"])
-    assert len(m0["files"]) == 16
-    assert all(f in m0["file_buckets"] for f in m0["files"])
-
-    keys = spark.createDataFrame([("u7",)], ["url"])
-    ins = spark.createDataFrame([(999_999, "u7")], ["id", "url"])
-    m1 = S.replace_keys(spark, tdir, ["url"], keys, ins)
-    # one key -> one bucket -> at most a couple of candidate files;
-    # the rest were pruned from the scan entirely
-    assert m1["n_pruned_files"] >= 13, m1["n_pruned_files"]
-    assert m1["n_rewritten_files"] >= 1
-    got = S.read_snapshot(spark, tdir)
-    assert got.filter("url = 'u7'").count() == 1
-    assert got.count() == 4000 - 8 + 1  # 8 old u7 rows replaced by 1
-
-
-def test_merge_upsert_prunes_via_range_stats(spark, tdir):
-    """Range-clustered tables prune keyed merges via the manifest's
-    footer min/max column bounds (precise bisect test under the
-    key-collect cap)."""
-    df = spark.range(10_000).withColumnRenamed("id", "cell") \
-        .selectExpr("cell", "cast(cell * 2 as long) as v")
-    m0 = S.write_snapshot(df.repartitionByRange(10, "cell"), tdir,
-                          mode="overwrite", cluster_by=["cell"],
-                          cluster_kind="range")
-    assert any("cell" in s for s in m0["file_stats"].values())
-    ch = spark.createDataFrame([(5, 999)], ["cell", "v"])
-    m1 = S.merge_upsert(ch, tdir, ["cell"])
-    # key 5 lives in exactly one range file; the other 9 pruned
-    assert m1["n_pruned_files"] >= 8, m1["n_pruned_files"]
-    assert m1["n_rewritten_files"] == 1
-    got = S.read_snapshot(spark, tdir)
-    assert rows_of(got.filter("cell = 5")) == [(5, 999)]
-    assert got.count() == 10_000
-
-
-def test_overwrite_dropping_cluster_contract_warns(spark, tdir):
-    """ADVICE round 3: an overwrite that silently omits cluster_by
-    while the parent declared one reintroduces layout rot — warn; an
-    explicit cluster_by=[] drops it silently."""
-    df = spark.createDataFrame([(1, "u1")], ["id", "url"])
-    S.write_snapshot(df, tdir, mode="overwrite", cluster_by=["url"])
-    with pytest.warns(UserWarning, match="cluster_by"):
-        S.write_snapshot(df, tdir, mode="overwrite")
-    # re-establish, then drop deliberately: no warning
-    S.write_snapshot(df, tdir, mode="overwrite", cluster_by=["url"])
-    import warnings as W
-
-    with W.catch_warnings():
-        W.simplefilter("error")
-        m = S.write_snapshot(df, tdir, mode="overwrite", cluster_by=[])
-    assert m["cluster_by"] is None
-
-
-def test_compaction_reclusters_spliced_files(spark, tdir):
-    """Splice outputs drift off the clustering contract; the manifest
-    ledger marks them and compact_files re-clusters them even when
-    they exceed small_file_bytes — then drains the ledger."""
-    from pyspark.sql import functions as F
-
-    df = (spark.range(2000)
-          .withColumn("url", F.concat(F.lit("u"),
-                                      (F.col("id") % 100).cast("string"))))
-    S.write_snapshot(df.repartition(4, "url"), tdir,
-                     mode="overwrite", cluster_by=["url"])
-    keys = spark.createDataFrame([("u3",), ("u42",)], ["url"])
-    ins = spark.createDataFrame([(7777, "u3")], ["id", "url"])
-    m1 = S.replace_keys(spark, tdir, ["url"], keys, ins)
-    assert m1["spliced_files"] == sorted(m1["added_files"])
-
-    n = S.read_snapshot(spark, tdir).count()
-    # threshold of 1 byte: nothing qualifies as "small", so ONLY the
-    # spliced ledger forces the rewrite
-    m2 = S.compact_files(spark, tdir, small_file_bytes=1)
-    assert m2["operation"] == "compact"
-    assert m2["n_recl_spliced_files"] == len(m1["spliced_files"])
-    assert m2["spliced_files"] == []  # ledger drained
-    assert S.read_snapshot(spark, tdir).count() == n
-    # re-clustered outputs honor the contract again: one file per key
-    import pyarrow.parquet as pq
-
-    hits = {}
-    for f in m2["added_files"]:
-        for u in set(pq.read_table(f, columns=["url"])["url"].to_pylist()):
-            hits.setdefault(u, set()).add(f)
-    spliced_urls = {u for f in m1["added_files"]
-                    for u in pq.read_table(f, columns=["url"])["url"].to_pylist()}
-    assert all(len(fs) == 1 for u, fs in hits.items() if u in spliced_urls)
+    """A writer holding metadata from before an expiry must not
+    publish over it: that would resurrect the expired snapshots,
+    whose manifest lists are already deleted."""
+    ice.write_iceberg(_ids(spark, [0]), tdir)
+    for i in (1, 2):
+        ice.append_iceberg(_ids(spark, [i]), tdir)
+    stale = ice.load_metadata(tdir)
+    ice.expire_snapshots(tdir, keep_last=1)   # publishes a new version
+    with pytest.raises(ice.IcebergError, match="CommitConflict"):
+        ice._append(_ids(spark, [9]), tdir, partition_by=None,
+                    parent=stale)
+    meta = ice.load_metadata(tdir)
+    assert meta["current-snapshot-id"] == 3
+    assert ice.snapshot_ids(tdir) == [3]
+    assert meta["_loaded-version"] == stale["_loaded-version"] + 1
+    assert rows_of(ice.read_iceberg(spark, tdir)) == [(0,), (1,), (2,)]
